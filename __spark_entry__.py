@@ -607,16 +607,16 @@ def q_events_json_props(spark, sf_dir):
 
 
 def q_events_sessionize(spark, sf_dir):
+    from sakura_spark.operators import epoch_micros
+
     ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_min = 30
-    with_gap = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(
+    lagged = ev.withColumn("prev_ts", F.lag("ts").over(w))
+    gap_us = epoch_micros(lagged, "ts") - epoch_micros(lagged, "prev_ts")
+    with_gap = lagged.withColumn(
         "is_new",
-        F.when(
-            F.col("prev_ts").isNull()
-            | ((F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")) > gap_min * 60),
-            1,
-        ).otherwise(0),
+        F.when(F.col("prev_ts").isNull() | (gap_us > gap_min * 60 * 1_000_000), 1).otherwise(0),
     )
     with_sess = with_gap.withColumn(
         "session_id", F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
@@ -720,17 +720,14 @@ def q_events_concurrency(spark, sf_dir):
     concurrency-limit audits. Oracle: the identical sessionize + sweep
     SQL (DuckDB's single-node window IS the semantic spec; the entry
     proves the distributed prefix sum reproduces it bit-for-bit)."""
-    from sakura_spark.operators import interval_concurrency
+    from sakura_spark.operators import epoch_micros, interval_concurrency
 
     ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    with_gap = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(
-        "is_new",
-        F.when(
-            F.col("prev_ts").isNull()
-            | ((F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")) > 1800),
-            1,
-        ).otherwise(0),
+    lagged = ev.withColumn("prev_ts", F.lag("ts").over(w))
+    gap_us = epoch_micros(lagged, "ts") - epoch_micros(lagged, "prev_ts")
+    with_gap = lagged.withColumn(
+        "is_new", F.when(F.col("prev_ts").isNull() | (gap_us > 1800 * 1_000_000), 1).otherwise(0)
     )
     sess = (
         with_gap.withColumn(

@@ -13,7 +13,10 @@ Capability-parity with the reference's management/manipulation layer
 * constraint enforcement is whole-batch: each ICL constraint compiles to a
   violations-DataFrame (icl/compiler), with polarity-driven cascade
   narrowing (SURVEY §4.3) instead of the reference's per-tuple focused
-  re-checks;
+  re-checks. Each statement (register_constraint, insert, delete, assign,
+  commit) gathers all of its checks — immediate, cascade, deferred at
+  commit — and validates them with one tagged Spark job
+  (``_run_violation_checks``);
 * mutations are validate-then-apply: the new state is only installed after
   every immediate constraint passes, which has the same observable
   semantics as the reference's apply-then-rollback CAS loop.
@@ -46,6 +49,9 @@ HISTORY_CAP = 128
 
 IMMEDIATE = "immediate"
 DEFERRED = "deferred"
+
+# One constraint check: (constraint name, relation, message, violations df).
+Check = tuple[str, str, str, DataFrame]
 
 
 @dataclass
@@ -151,15 +157,14 @@ class Database:
         relation: str,
         body: icl_ast.Body,
         timing: str = IMMEDIATE,
-        validate_existing: bool = True,
     ) -> None:
         rel = self._rel(relation)
-        c = Constraint(name, relation, body, timing)
-        if validate_existing and timing == IMMEDIATE:
-            n = icl_compiler.violations(rel.df, body, self.resolver).count()
-            if n:
-                raise errors.ConstraintViolation(name, relation, f"{n} existing rows violate")
-        self.state.constraints[name] = c
+        if timing == IMMEDIATE:
+            self._run_violation_checks(
+                [(name, relation, "existing rows violate",
+                  icl_compiler.violations(rel.df, body, self.resolver))]
+            )
+        self.state.constraints[name] = Constraint(name, relation, body, timing)
         self._mutated(None)
 
     # ------------------------------------------------------------------ DML
@@ -216,21 +221,13 @@ class Database:
 
         new_df = rel.df.unionByName(batch)
         resolver = self._resolver_with(relation, new_df)
-        # Immediate constraints on the mutated relation: the new rows. All
-        # constraints' violation queries fold into one tagged job.
-        checks = []
-        for c in self._constraints_for(relation):
-            if c.timing == DEFERRED:
-                self.deferred_pending.add(c.name)
-                continue
-            checks.append(
-                (c.name, relation, "inserted rows violate",
-                 icl_compiler.violations(batch, c.body, resolver))
-            )
-        self._run_violation_checks(checks)
-        # Cascade: constraints referencing this relation with insert-triggered
+        # Immediate constraints on the new rows, then the cascade:
+        # constraints referencing this relation with insert-triggered
         # polarity re-check their own relation's rows (narrowed).
-        self._cascade(relation, batch, event="insert", resolver=resolver)
+        self._run_violation_checks(
+            self._immediate_checks(relation, batch, resolver, "inserted rows violate")
+            + self._cascade(relation, batch, event="insert", resolver=resolver)
+        )
         rel.df = new_df
         self._mutated(relation)
         return n
@@ -265,7 +262,9 @@ class Database:
         delete_where's semijoin guarantees it by construction)."""
         new_df = rel.df.join(batch, on=rel.attrs, how="left_anti")
         resolver = self._resolver_with(relation, new_df)
-        self._cascade(relation, batch, event="delete", resolver=resolver)
+        self._run_violation_checks(
+            self._cascade(relation, batch, event="delete", resolver=resolver)
+        )
         rel.df = new_df
         self._mutated(relation)
         return n
@@ -294,23 +293,17 @@ class Database:
                 f"{stats['domain_bad']} rows violate domain checks on {rel.name}"
             )
         resolver = self._resolver_with(relation, batch)
-        checks = []
-        for c in self._constraints_for(relation):
-            if c.timing == DEFERRED:
-                self.deferred_pending.add(c.name)
-                continue
-            checks.append(
-                (c.name, relation, "rows violate",
-                 icl_compiler.violations(batch, c.body, resolver))
-            )
-        self._run_violation_checks(checks)
-        # Validate-then-apply: BOTH cascades (insert polarity on the new
-        # contents, delete polarity on the rows the overwrite removes) run
-        # before the relation is touched, so a ConstraintViolation leaves
-        # the old extension intact — same atomicity as insert/delete paths.
+        # Validate-then-apply: the immediate checks and BOTH cascades
+        # (insert polarity on the new contents, delete polarity on the rows
+        # the overwrite removes) run before the relation is touched, so a
+        # ConstraintViolation leaves the old extension intact — same
+        # atomicity as insert/delete paths.
         removed = rel.df.join(batch, on=rel.attrs, how="left_anti")
-        self._cascade(relation, batch, event="insert", resolver=resolver)
-        self._cascade(relation, removed, event="delete", resolver=resolver)
+        self._run_violation_checks(
+            self._immediate_checks(relation, batch, resolver, "rows violate")
+            + self._cascade(relation, batch, event="insert", resolver=resolver)
+            + self._cascade(relation, removed, event="delete", resolver=resolver)
+        )
         rel.df = batch
         self._mutated(relation)
         return stats["n"]
@@ -402,14 +395,12 @@ class Database:
     def commit(self) -> str:
         """Check deferred constraints (lib/manipulation.ml:965-1027), then
         snapshot; returns the new database hash."""
-        for cname in sorted(self.deferred_pending):
-            c = self.state.constraints.get(cname)
-            if c is None:
-                continue
-            rel = self._rel(c.relation)
-            bad = icl_compiler.violations(rel.df, c.body, self.resolver).count()
-            if bad:
-                raise errors.ConstraintViolation(c.name, c.relation, f"{bad} rows violate at commit")
+        pending = [self.state.constraints.get(n) for n in sorted(self.deferred_pending)]
+        self._run_violation_checks([
+            (c.name, c.relation, "rows violate at commit",
+             icl_compiler.violations(self._rel(c.relation).df, c.body, self.resolver))
+            for c in pending if c is not None
+        ])
         self.deferred_pending.clear()
         return self._snapshot()
 
@@ -523,8 +514,21 @@ class Database:
             return rows.select(*rel.attrs)
         return self.spark.createDataFrame([Row(**r) for r in rows], schema=struct)
 
-    def _constraints_for(self, relation: str) -> list[Constraint]:
-        return [c for c in self.state.constraints.values() if c.relation == relation]
+    def _immediate_checks(
+        self, relation: str, rows: DataFrame, resolver, message: str
+    ) -> list[Check]:
+        """Checks of `relation`'s immediate constraints over `rows`; its
+        deferred constraints are marked pending for commit instead."""
+        checks = []
+        for c in self.state.constraints.values():
+            if c.relation != relation:
+                continue
+            if c.timing == DEFERRED:
+                self.deferred_pending.add(c.name)
+            else:
+                violations = icl_compiler.violations(rows, c.body, resolver)
+                checks.append((c.name, relation, message, violations))
+        return checks
 
     def _resolver_with(self, relation: str, df: DataFrame):
         def resolve(name: str) -> DataFrame:
@@ -539,56 +543,46 @@ class Database:
     # single-tuple technique (the reference mutates one tuple at a time).
     SUBSTITUTE_MAX_ROWS = 32
 
-    def _run_violation_checks(
-        self, checks: list[tuple[str, str, str, DataFrame]]
-    ) -> None:
-        """Run a set of per-constraint violation queries as ONE Spark job.
+    def _run_violation_checks(self, checks: list[Check]) -> None:
+        """Run a statement's per-constraint violation queries as ONE Spark
+        job — the only place constraint checks reach Spark.
 
-        Each entry is (constraint_name, relation, message, violations_df).
         Instead of one `.count()` action per constraint (K+ job launches per
         mutation on a K-constraint schema — pure scheduler overhead at
         ingest rates), every violations frame is projected to a literal tag
         column, unioned, and aggregated with a single `groupBy(tag).count()`
-        action. Only violated tags come back; the first in submission order
-        raises, matching the sequential loop's error choice.
+        action; a single check is one `.count()`. The first violated check
+        in submission order raises.
         """
-        if not checks:
-            return
-        if len(checks) == 1:
-            name, relation, message, df = checks[0]
-            bad = df.count()
-            if bad:
-                raise errors.ConstraintViolation(name, relation, f"{bad} {message}")
-            return
-        tagged = None
-        for i, (_, _, _, df) in enumerate(checks):
-            t = df.select(F.lit(i).alias("__constraint"))
-            tagged = t if tagged is None else tagged.unionAll(t)
-        try:
-            counts = {r["__constraint"]: r["n"] for r in
-                      tagged.groupBy("__constraint").agg(F.count(F.lit(1)).alias("n")).collect()}
-        except Exception:
-            # A runtime error in any single constraint's query fails the
-            # whole batched job as a raw Spark error — masking WHICH
-            # constraint is broken, and masking a genuine violation an
-            # earlier-ordered constraint would have raised first. Re-run
-            # sequentially: ordered attribution is restored, a genuine
-            # earlier violation raises ConstraintViolation, and the broken
-            # query's own error surfaces from its position in the order.
-            # The sequential pass is authoritative: if every check runs
-            # clean, the batched failure was job-level (not a constraint),
-            # and validation legitimately passes.
-            for name, relation, message, df in checks:
-                bad = df.count()
-                if bad:
-                    raise errors.ConstraintViolation(name, relation, f"{bad} {message}")
-            return
-        for i, (name, relation, message, _) in enumerate(checks):
-            bad = counts.get(i, 0)
+        # Sequential and lazy: a single check, or the fallback below.
+        counts = (df.count() for *_, df in checks)
+        if len(checks) > 1:
+            tagged = None
+            for i, (*_, df) in enumerate(checks):
+                t = df.select(F.lit(i).alias("__constraint"))
+                tagged = t if tagged is None else tagged.unionAll(t)
+            try:
+                got = {r["__constraint"]: r["n"] for r in
+                       tagged.groupBy("__constraint").agg(F.count(F.lit(1)).alias("n")).collect()}
+                counts = [got.get(i, 0) for i in range(len(checks))]
+            except Exception:
+                # A runtime error in any single constraint's query fails the
+                # whole batched job as a raw Spark error — masking WHICH
+                # constraint is broken, and masking a genuine violation an
+                # earlier-ordered constraint would have raised first. Fall
+                # back to the sequential counts: ordered attribution is
+                # restored, a genuine earlier violation raises
+                # ConstraintViolation, and the broken query's own error
+                # surfaces from its position in the order. The sequential
+                # pass is authoritative: if every check runs clean, the
+                # batched failure was job-level (not a constraint), and
+                # validation legitimately passes.
+                pass
+        for (name, relation, message, _), bad in zip(checks, counts):
             if bad:
                 raise errors.ConstraintViolation(name, relation, f"{bad} {message}")
 
-    def _cascade(self, mutated: str, changed_rows: DataFrame, event: str, resolver) -> None:
+    def _cascade(self, mutated: str, changed_rows: DataFrame, event: str, resolver) -> list[Check]:
         """Polarity-driven re-check (SURVEY §4.3, lib/manipulation.ml:479-521).
 
         After mutating `mutated`, re-validate constraints on other relations
@@ -608,6 +602,9 @@ class Database:
            compiler's degenerate-quantifier path takes over). Deletes never
            substitute — a removed tuple is not a binding the constraint
            must hold for; an Exists recheck needs the surviving quantifier.
+
+        Returns the rechecks for the statement's `_run_violation_checks`
+        call; deferred constraints it triggers are marked pending instead.
         """
         trigger = (
             {icl_compiler.NEGATIVE, icl_compiler.BOTH}
@@ -615,7 +612,7 @@ class Database:
             else {icl_compiler.POSITIVE, icl_compiler.BOTH}
         )
         transitions_cache: list | None = None  # collected once, shared
-        all_checks: list[tuple[str, str, str, DataFrame]] = []
+        all_checks: list[Check] = []
         for c in self.state.constraints.values():
             pol = icl_compiler.polarity(c.body).get(mutated)
             if pol not in trigger:
@@ -705,9 +702,7 @@ class Database:
                     (c.name, c.relation, f"rows violate after {event} on {mutated}",
                      icl_compiler.violations(check_rows, body, resolver))
                 )
-        # All cascade rechecks (across constraints AND per-transition
-        # substituted bodies) run as one tagged aggregation job.
-        self._run_violation_checks(all_checks)
+        return all_checks
 
     def _mutated(self, relation: str | None) -> None:
         if relation is not None and relation in self.state.relations:

@@ -18,7 +18,7 @@ diffs, ``left.added ⊆ L−A`` while ``right.removed ⊆ A−R``, so the
 intersection defining a tuple conflict is provably empty — the rule (and
 the reference's, lib/management/merge.ml:97-157, which computes exactly
 the same sets) holds vacuously for any pair of states reached by
-mutation. It is kept for parity and for manifests constructed by hand.
+mutation, so no tuple-conflict check is run.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sakura_spark import errors
 from sakura_spark.hashing import TUPLE_HASH_COL
-from sakura_spark.management.diff import diff_databases
+from sakura_spark.management.diff import _tuples, diff_databases
 from sakura_spark.management.store import SnapshotStore
 
 PREFER_LEFT = "prefer_left"
@@ -97,7 +97,7 @@ def merge_databases(
             its known content hash so the merge commit reuses the stored
             parquet instead of re-writing and re-hashing it."""
             res.schemas[name] = entry["schema"]
-            res.merged_relations[name] = _tuples_of(spark, store, entry, name)
+            res.merged_relations[name] = _tuples(spark, store, entry, name)
             res.known_hashes[name] = entry["hash"]
 
         # Schema conflicts: created/changed differently on the two sides.
@@ -139,7 +139,7 @@ def merge_databases(
             continue
 
         # Tuple-level 3-way apply.
-        base = _tuples_of(spark, store, a, name) if a is not None else None
+        base = _tuples(spark, store, a, name) if a is not None else None
         if base is None:
             take_as_is(l if strategy != PREFER_RIGHT else r)
             continue
@@ -149,30 +149,15 @@ def merge_databases(
         r_rem = rd.removed if rd and rd.kind == "modified" else None
 
         # Add/remove conflicts on the same tuple hash
-        # (lib/management/merge.ml:97-157): PROVABLY the empty set for any
-        # pair of diffs, because both sides diff against the SAME ancestor
-        # snapshot right here — ``l_add ⊆ L − A`` (anti-join against A) so
-        # every member is ABSENT from A, while ``r_rem ⊆ A − R`` so every
-        # member is PRESENT in A; their intersection is empty by membership
-        # in A alone, and symmetrically for (r_add, l_rem). The reference's
-        # semi-join + count (a multi-snapshot scan job per merged relation
-        # — the single most expensive job of every DCL merge) therefore
-        # computes a constant, and round 14 replaces it with the identity.
-        # The conflict-resolution strategies below stay for parity with the
-        # reference's shape; with n_conflicts == 0 the apply is exact.
-        n_conflicts = 0
-        if n_conflicts:
-            res.conflicts.append(f"{name}: {n_conflicts} tuple add/remove conflicts")
-            if strategy == REVERT_TO_ANCESTOR:
-                res.schemas[name] = a["schema"]
-                res.merged_relations[name] = base
-                continue
-            if strategy == PREFER_LEFT:
-                merged = _apply(_apply(base, r_add, r_rem), l_add, l_rem)
-            else:
-                merged = _apply(_apply(base, l_add, l_rem), r_add, r_rem)
-        else:
-            merged = _apply(_apply(base, l_add, l_rem), r_add, r_rem)
+        # (lib/management/merge.ml:97-157) are PROVABLY the empty set here,
+        # because both sides diff against the SAME ancestor snapshot —
+        # ``l_add ⊆ L − A`` (anti-join against A) so every member is ABSENT
+        # from A, while ``r_rem ⊆ A − R`` so every member is PRESENT in A;
+        # their intersection is empty by membership in A alone, and
+        # symmetrically for (r_add, l_rem). The reference's semi-join +
+        # count (a multi-snapshot scan job per merged relation) would
+        # compute a constant, so the two applies commute and are exact.
+        merged = _apply(_apply(base, l_add, l_rem), r_add, r_rem)
         res.schemas[name] = a["schema"]
         res.merged_relations[name] = merged
         if ld is None and rd is None:
@@ -181,9 +166,3 @@ def merge_databases(
             # (the common case at scale: a merge touches few relations).
             res.known_hashes[name] = a["hash"]
     return res
-
-
-def _tuples_of(spark, store, entry, name):
-    from sakura_spark.hashing import with_tuple_hash
-
-    return with_tuple_hash(store.get_relation(spark, entry["hash"]), name)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import TimestampNTZType
 
 
 def salted_join(
@@ -139,6 +140,16 @@ def asof_join(
     )
 
 
+def epoch_micros(df: DataFrame, col: str) -> Column:
+    """``df[col]`` as exact integer microseconds since the epoch. A
+    TIMESTAMP_NTZ reads as UTC wall-clock time, the way ``unix_timestamp``
+    and DuckDB's ``epoch()`` read it, whatever the session time zone."""
+    if isinstance(df.schema[col].dataType, TimestampNTZType):
+        epoch = F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        return F.timestamp_diff("MICROSECOND", epoch, F.col(col))
+    return F.unix_micros(F.col(col))
+
+
 def range_join(
     left: DataFrame,
     right: DataFrame,
@@ -148,7 +159,6 @@ def range_join(
     lower: Column | int,
     upper: Column | int,
     bucket_seconds: int,
-    time_unit_to_seconds=F.unix_timestamp,
 ) -> DataFrame:
     """Inner join of left and right rows sharing ``on`` with
     ``right_time - left_time`` in [lower, upper] seconds, via equi-bucketing.
@@ -161,34 +171,36 @@ def range_join(
     No dedup pass is needed: a right row has exactly ONE bucket, so each
     qualifying (left, right) pair forms exactly once — inner-join bag
     semantics, and no post-join shuffle.
-    """
-    lsec = time_unit_to_seconds(F.col(left_time))
-    rsec = time_unit_to_seconds(F.col(right_time))
-    lo = F.lit(lower) if isinstance(lower, int) else lower
-    hi = F.lit(upper) if isinstance(upper, int) else upper
 
-    lb = left.withColumn(
+    Times compare in exact integer microseconds, so a pair a fraction of a
+    second outside the window does not match.
+    """
+    micros = 1_000_000
+    lo, hi = ((F.lit(b) if isinstance(b, int) else b).cast("long") * micros
+              for b in (lower, upper))
+    bucket_us = bucket_seconds * micros
+
+    lb = left.withColumn("__lus", epoch_micros(left, left_time)).withColumn(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor((lsec + lo) / bucket_seconds).cast("long"),
-                F.floor((lsec + hi) / bucket_seconds).cast("long"),
+                F.floor((F.col("__lus") + lo) / bucket_us).cast("long"),
+                F.floor((F.col("__lus") + hi) / bucket_us).cast("long"),
             )
         ),
     )
-    rb = right.withColumn("__bucket", F.floor(rsec / bucket_seconds).cast("long"))
+    rb = right.withColumn("__rus", epoch_micros(right, right_time))
+    rb = rb.withColumn("__bucket", F.floor(F.col("__rus") / bucket_us).cast("long"))
     collisions = (set(left.columns) & set(right.columns)) - {on}
     rb = rb.select(
         F.col(on),
         "__bucket",
+        "__rus",
         *[F.col(c).alias(c + "_r" if c in collisions else c) for c in right.columns if c != on],
     )
-    rsec_joined = time_unit_to_seconds(
-        F.col(right_time + "_r" if right_time in collisions else right_time)
-    )
-    joined = lb.join(rb, on=[on, "__bucket"]).drop("__bucket")
-    delta = rsec_joined - time_unit_to_seconds(F.col(left_time))
-    return joined.filter((delta >= lo) & (delta <= hi))
+    joined = lb.join(rb, on=[on, "__bucket"])
+    delta = F.col("__rus") - F.col("__lus")
+    return joined.filter((delta >= lo) & (delta <= hi)).drop("__bucket", "__lus", "__rus")
 
 
 def merge_upsert(

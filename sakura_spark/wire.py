@@ -796,6 +796,7 @@ class TcpFrontend:
         self._sock.listen(5)  # lib/transport.ml:66
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
+        self._conns: set[socket.socket] = set()  # open client connections
         self._accept_thread: threading.Thread | None = None
 
     def start(self) -> "TcpFrontend":
@@ -805,6 +806,14 @@ class TcpFrontend:
 
     def stop(self) -> None:
         self._stop.set()
+        # Closing a socket does not wake a thread blocked in accept() or
+        # recv() on it; shutting it down does, so the joins below return
+        # at once instead of running out their timeouts.
+        for s in [self._sock, *list(self._conns)]:
+            try:
+                s.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
         try:
             self._sock.close()
         except OSError:
@@ -831,6 +840,7 @@ class TcpFrontend:
                 conn, _ = self._sock.accept()
             except OSError:
                 return  # socket closed by stop()
+            self._conns.add(conn)
             t = threading.Thread(target=self._handle_client, args=(conn,), daemon=True)
             t.start()
             # Prune finished handlers so a long-lived server's thread list
@@ -866,6 +876,7 @@ class TcpFrontend:
                     resp = self.server.execute_sexp(cmd)
                     conn.sendall((resp + "\n").encode())
         finally:
+            self._conns.discard(conn)
             try:
                 conn.close()
             except OSError:

@@ -35,6 +35,11 @@ def spark():
     # unique plans per run). Physical plan SHAPES (what test_scale
     # asserts: joins, exchanges, pushdown, Python nodes) are unaffected by
     # execution mode; production sessions keep codegen on.
+    # Local data (createDataFrame, parallelize, range) splits into 4
+    # partitions rather than one per thread: still several partitions, so
+    # cross-partition logic stays exercised, but half the tasks per tiny
+    # stage (a 1-row count took 0.65 s at 8 partitions, 0.3 s at 4, on a
+    # 4-core host).
     s = get_spark(
         "sakura-tests",
         cpus=8,
@@ -43,6 +48,7 @@ def spark():
             "spark.sql.adaptive.enabled": "false",
             "spark.sql.codegen.wholeStage": "false",
             "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+            "spark.default.parallelism": "4",
         },
     )
     yield s

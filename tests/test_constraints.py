@@ -5,7 +5,7 @@ constraint:/cascade:/commit: groups)."""
 import pytest
 
 from sakura_spark import errors
-from sakura_spark.database import DEFERRED, Database
+from sakura_spark.database import DEFERRED, IMMEDIATE, Database
 from sakura_spark.icl import (
     And,
     Between,
@@ -461,22 +461,35 @@ def test_forall_insert_into_quantifier_uses_substitution(spark, store):
         db.insert_tuples("Department", [{"dept_id": 9}])  # unaudited
 
 
-def test_insert_validation_launches_constant_job_count(spark, store):
-    """The immediate-constraint check is ONE tagged aggregation job no
-    matter how many constraints the relation carries (the per-constraint
-    `.count()` loop launched K jobs per insert — scheduler overhead, not
-    data work, at 100 TB ingest). Measured via job-group job ids: an insert
-    into a 3-constraint relation must launch exactly as many Spark jobs as
-    an insert into a 1-constraint relation."""
+@pytest.mark.parametrize("statement", ["insert_tuples", "assign", "commit"])
+def test_insert_validation_launches_constant_job_count(spark, store, statement):
+    """A statement's constraint checks are ONE tagged aggregation job no
+    matter how many constraints it checks (a per-constraint `.count()` loop
+    launches K jobs per statement — scheduler overhead, not data work, at
+    100 TB ingest). Measured via job-group job ids: the statement on a
+    3-constraint relation must launch exactly as many Spark jobs as on a
+    1-constraint relation — immediate constraints for insert and assign,
+    pending deferred constraints for commit."""
+    timing = DEFERRED if statement == "commit" else IMMEDIATE
 
     def make_db(name, n_constraints):
         db = Database(spark, name, store=store, snapshot_on_mutation=False)
         db.create_relation("r", [("v", "integer")])
         for i in range(n_constraints):
             db.register_constraint(
-                f"c{i}", "r", Cmp("lte", Var("v"), ConstVal(100 + i))
+                f"c{i}", "r", Cmp("lte", Var("v"), ConstVal(100 + i)), timing=timing
             )
         return db
+
+    def statement_of(db, v):
+        """The statement to measure, after the set-up it needs."""
+        if statement == "insert_tuples":
+            return lambda: db.insert_tuples("r", [{"v": v}])
+        if statement == "assign":
+            df = spark.createDataFrame([(v,)], db.relation("r").schema)
+            return lambda: db.assign("r", df)
+        db.insert_tuples("r", [{"v": v}])  # marks every constraint pending
+        return db.commit
 
     def count_jobs(group, fn):
         sc = spark.sparkContext
@@ -487,15 +500,15 @@ def test_insert_validation_launches_constant_job_count(spark, store):
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    db1 = make_db("jobs1", 1)
-    db3 = make_db("jobs3", 3)
-    jobs1 = count_jobs("grp-one", lambda: db1.insert_tuples("r", [{"v": 5}]))
-    jobs3 = count_jobs("grp-three", lambda: db3.insert_tuples("r", [{"v": 5}]))
+    db1 = make_db(f"jobs1_{statement}", 1)
+    db3 = make_db(f"jobs3_{statement}", 3)
+    jobs1 = count_jobs(f"grp-one-{statement}", statement_of(db1, 5))
+    jobs3 = count_jobs(f"grp-three-{statement}", statement_of(db3, 5))
     assert jobs3 == jobs1, f"job count grew with constraint count: {jobs1} -> {jobs3}"
     # And violations still surface with the right constraint attribution:
     # v=101 violates only c0 (v <= 100); c1/c2 (<=101, <=102) pass.
     with pytest.raises(errors.ConstraintViolation, match="c0"):
-        db3.insert_tuples("r", [{"v": 101}])
+        statement_of(db3, 101)()
 
 
 def test_batched_check_falls_back_to_sequential_on_job_error(spark, store):

@@ -133,18 +133,23 @@ def test_asof_matches_pandas_merge_asof(spark):
 
 
 def test_range_join(spark):
-    probes = spark.createDataFrame(
-        [(1, ts(30)), (1, ts(50)), (2, ts(30))], "k long, pt timestamp"
-    )
-    refs = spark.createDataFrame(
-        [(1, ts(25), "a"), (1, ts(35), "b"), (1, ts(59), "c"), (2, ts(45), "d")],
-        "k long, rt timestamp, tag string",
-    )
-    # matches where rt - pt in [-10, +10] seconds, same k
-    out = range_join(probes, refs, on="k", left_time="pt", right_time="rt",
-                     lower=-10, upper=10, bucket_seconds=7)
-    got = sorted((r.k, r.pt.second, r.tag) for r in out.collect())
-    assert got == [(1, 30, "a"), (1, 30, "b"), (1, 50, "c")]
+    # Sub-second boundary rows: "e" is 10.5 s after its probe (outside the
+    # window, though whole seconds would round it to 10), "f" 9.5 s after.
+    half = dt.timedelta(milliseconds=500)
+    for typ in ("timestamp", "timestamp_ntz"):
+        probes = spark.createDataFrame(
+            [(1, ts(30)), (1, ts(50)), (2, ts(30))], f"k long, pt {typ}"
+        )
+        refs = spark.createDataFrame(
+            [(1, ts(25), "a"), (1, ts(35), "b"), (1, ts(59), "c"), (2, ts(45), "d"),
+             (2, ts(40) + half, "e"), (2, ts(39) + half, "f")],
+            f"k long, rt {typ}, tag string",
+        )
+        # matches where rt - pt in [-10, +10] seconds, same k
+        out = range_join(probes, refs, on="k", left_time="pt", right_time="rt",
+                         lower=-10, upper=10, bucket_seconds=7)
+        got = sorted((r.k, r.pt.second, r.tag) for r in out.collect())
+        assert got == [(1, 30, "a"), (1, 30, "b"), (1, 50, "c"), (2, 30, "f")], typ
 
 
 def test_range_join_matches_naive(spark):

@@ -421,6 +421,30 @@ def test_tcp_survives_internal_error(spark, store, monkeypatch):
         assert len(fe._threads) <= 2
 
 
+def test_tcp_stop_wakes_blocked_threads():
+    """stop() returns at once with a client still connected: the accept
+    thread and the idle handler (blocked in recv) are woken, not left to
+    run out their 5 s join timeouts."""
+    import socket as pysocket
+    import time
+
+    from sakura_spark.wire import TcpFrontend
+
+    fe = TcpFrontend(server=None).start()  # no command is ever sent
+    c = pysocket.create_connection((fe.host, fe.port), timeout=30)
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline and not fe._conns:
+        time.sleep(0.05)
+    assert fe._conns, "connection was never accepted"
+    t0 = time.monotonic()
+    fe.stop()
+    elapsed = time.monotonic() - t0
+    c.close()
+    assert elapsed < 4, f"stop() took {elapsed:.1f} s"
+    assert not fe._accept_thread.is_alive()
+    assert not any(t.is_alive() for t in fe._threads)
+
+
 def test_unix_socket_frontend_roundtrip(spark, store, tmp_path):
     """lib/transport.ml:23-29 parity: the transport accepts a `(path ...)`
     AF_UNIX socket as an alternative to `(address port)`. Same framing as
