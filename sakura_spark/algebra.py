@@ -22,9 +22,15 @@ Semantics preserved from the reference (documented divergences in SURVEY §7):
 from __future__ import annotations
 
 from collections.abc import Iterable
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, StructType
+
+# Wide enough for any decimal(38, s) value: quantizing never runs out of
+# digits before Arrow's own precision check can reject an oversized value.
+_DECIMAL_CONTEXT = Context(prec=80, rounding=ROUND_HALF_UP)
 
 
 def select(df: DataFrame, predicate: Column | str) -> DataFrame:
@@ -135,13 +141,58 @@ def take(df: DataFrame, n: int, order_by: list[str | Column] | None = None) -> D
     return df.limit(n)
 
 
+def local_frame(spark: SparkSession, rows: Iterable, struct: StructType) -> DataFrame:
+    """Driver-side rows as a JVM ``LocalRelation`` — the one way statement
+    data (inserted/deleted tuples, DRL literals, empty and catalog
+    relations) enters Spark.
+
+    Rows are tuples (``Row``s included) in ``struct``'s field order, or
+    dicts. PySpark's own row verifier runs first, so a type mismatch raises
+    before anything is built, and values are converted exactly as
+    ``createDataFrame(list, struct)`` converts them (a naive timestamp is
+    the same instant). They then travel as one Arrow table: Catalyst sees
+    the relation's true size (broadcasts it, plans no shuffle for a 1-row
+    join) and scans it without a Python worker, where ``createDataFrame``
+    of a list builds a Python RDD of unknown size that every scan re-runs
+    in Python workers.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    verify = _make_type_verifier(struct)
+    convert = _create_converter(struct)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(struct.toInternal(convert(r)))
+    schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [()] * len(schema)
+    # Internal values are what Arrow expects for every Spark type: epoch
+    # micros for timestamps (hence the UTC-zoned Arrow type), epoch days
+    # for dates, Decimals, lists, tuples for structs. Decimals round half
+    # up to the column's scale as the JVM rounds them (Arrow would refuse).
+    arrays = []
+    for col, field, arrow_field in zip(columns, struct.fields, schema):
+        if isinstance(field.dataType, DecimalType):
+            step = Decimal(1).scaleb(-field.dataType.scale)
+            col = [None if v is None else _DECIMAL_CONTEXT.quantize(v, step) for v in col]
+        arrays.append(pa.array(col, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema), schema=struct)
+
+
 def const_relation(
     spark: SparkSession, rows: list[dict] | dict, schema: str | None = None
 ) -> DataFrame:
-    """Literal relation from (attr, value) pairs (lib/algebra.ml:51-62)."""
+    """Literal relation from (attr, value) pairs (lib/algebra.ml:51-62), a
+    ``local_frame``. Without a DDL ``schema`` the types are PySpark's
+    inference, as ``createDataFrame`` infers them (int -> bigint,
+    str -> string, float -> double, ...)."""
     if isinstance(rows, dict):
         rows = [rows]
-    return spark.createDataFrame([Row(**r) for r in rows], schema=schema)
+    rows = [Row(**r) for r in rows]
+    struct = spark._inferSchemaFromList(rows) if schema is None else spark._parse_ddl(schema)
+    return local_frame(spark, rows, struct)
 
 
 def materialize(df: DataFrame) -> list[Row]:

@@ -31,8 +31,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sakura_spark import errors
+from sakura_spark.algebra import local_frame
 from sakura_spark.domains import Domain, DomainRegistry, schema_to_struct
 from sakura_spark.hashing import (
     TUPLE_HASH_COL,
@@ -49,6 +51,19 @@ HISTORY_CAP = 128
 
 IMMEDIATE = "immediate"
 DEFERRED = "deferred"
+
+# The catalog relations' attributes, all strings (lib/prelude/catalog.ml).
+CATALOG_SCHEMAS = {
+    name: StructType([StructField(a, StringType()) for a in attrs])
+    for name, attrs in {
+        "sakura:relation": ["name"],
+        "sakura:domain": ["name"],
+        "sakura:attribute": ["relation_name", "attr_name", "domain_name"],
+        "sakura:constraint": ["name", "relation_name"],
+        "sakura:on": ["event"],
+        "sakura:timing": ["timing"],
+    }.items()
+}
 
 # One constraint check: (constraint name, relation, message, violations df).
 Check = tuple[str, str, str, DataFrame]
@@ -116,7 +131,7 @@ class Database:
             if dom not in self.registry:
                 raise errors.UnknownDomain(dom)
         struct = schema_to_struct(schema_pairs, self.registry)
-        empty = self.spark.createDataFrame([], schema=struct)
+        empty = local_frame(self.spark, [], struct)
         self.state.relations[name] = Relation(name, list(schema_pairs), empty)
         self._mutated(name)
 
@@ -130,7 +145,7 @@ class Database:
 
     def clear_relation(self, name: str) -> None:
         rel = self._rel(name)
-        rel.df = self.spark.createDataFrame([], schema=rel.df.schema)
+        rel.df = local_frame(self.spark, [], rel.df.schema)
         self._mutated(name)
 
     def register_domain(self, domain: Domain) -> None:
@@ -341,10 +356,7 @@ class Database:
         def resolve(name: str) -> DataFrame:
             if name in self.state.relations:
                 return self.state.relations[name].df
-            cat = self._catalog_frames()
-            if name in cat:
-                return cat[name]
-            raise errors.UnknownRelation(name)
+            return self._catalog_frame(name)
 
         return resolve
 
@@ -358,37 +370,27 @@ class Database:
 
     # ------------------------------------------------------------ catalog
 
-    def _catalog_frames(self) -> dict[str, DataFrame]:
-        """The six self-describing catalog relations
-        (lib/prelude/catalog.ml:10-55), queryable like user tables."""
-        spark = self.spark
-        rels = [Row(name=n) for n in sorted(self.state.relations)]
-        doms = [Row(name=n) for n in self.registry.names()]
-        attrs = [
-            Row(relation_name=r.name, attr_name=a, domain_name=d)
-            for r in self.state.relations.values()
-            for a, d in r.schema_pairs
-        ]
-        cons = [
-            Row(name=c.name, relation_name=c.relation)
-            for c in self.state.constraints.values()
-        ]
-        return {
-            "sakura:relation": spark.createDataFrame(rels or [], "name string"),
-            "sakura:domain": spark.createDataFrame(doms or [], "name string"),
-            "sakura:attribute": spark.createDataFrame(
-                attrs or [], "relation_name string, attr_name string, domain_name string"
-            ),
-            "sakura:constraint": spark.createDataFrame(
-                cons or [], "name string, relation_name string"
-            ),
-            "sakura:on": spark.createDataFrame(
-                [Row(event=e) for e in ("insert", "update", "delete")], "event string"
-            ),
-            "sakura:timing": spark.createDataFrame(
-                [Row(timing=t) for t in (IMMEDIATE, DEFERRED)], "timing string"
-            ),
-        }
+    def _catalog_frame(self, name: str) -> DataFrame:
+        """One of the six self-describing catalog relations
+        (lib/prelude/catalog.ml:10-55), queryable like user tables; any
+        other name is an UnknownRelation."""
+        if name == "sakura:relation":
+            rows = [(n,) for n in sorted(self.state.relations)]
+        elif name == "sakura:domain":
+            rows = [(n,) for n in self.registry.names()]
+        elif name == "sakura:attribute":
+            rows = [
+                (r.name, a, d) for r in self.state.relations.values() for a, d in r.schema_pairs
+            ]
+        elif name == "sakura:constraint":
+            rows = [(c.name, c.relation) for c in self.state.constraints.values()]
+        elif name == "sakura:on":
+            rows = [("insert",), ("update",), ("delete",)]
+        elif name == "sakura:timing":
+            rows = [(IMMEDIATE,), (DEFERRED,)]
+        else:
+            raise errors.UnknownRelation(name)
+        return local_frame(self.spark, rows, CATALOG_SCHEMAS[name])
 
     # ------------------------------------------------------------ commit
 
@@ -509,10 +511,10 @@ class Database:
             raise errors.UnknownRelation(name) from None
 
     def _as_batch(self, rel: Relation, rows: list[dict] | DataFrame) -> DataFrame:
-        struct = schema_to_struct(rel.schema_pairs, self.registry)
         if isinstance(rows, DataFrame):
             return rows.select(*rel.attrs)
-        return self.spark.createDataFrame([Row(**r) for r in rows], schema=struct)
+        struct = schema_to_struct(rel.schema_pairs, self.registry)
+        return local_frame(self.spark, [Row(**r) for r in rows], struct)
 
     def _immediate_checks(
         self, relation: str, rows: DataFrame, resolver, message: str

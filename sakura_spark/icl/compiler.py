@@ -154,7 +154,7 @@ def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFra
         return df.join(proj, on=cond, how="left_semi")
 
     if isinstance(body, ast.Not):
-        return _value_match(df, satisfied_rows(df, body.body, resolver), "left_anti")
+        return _value_match(df, _satisfied_values(df, body.body, resolver), "left_anti")
 
     if isinstance(body, ast.And):
         left = satisfied_rows(df, body.left, resolver)
@@ -164,89 +164,27 @@ def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFra
         # Positional union: both sides preserve df's schema exactly, and
         # name-based ops would misparse namespaced "var.attr" columns. The
         # value-based semi-join keeps each df copy satisfying either side.
-        l = satisfied_rows(df, body.left, resolver)
-        r = satisfied_rows(df, body.right, resolver)
+        l = _satisfied_values(df, body.left, resolver)
+        r = _satisfied_values(df, body.right, resolver)
         return _value_match(df, l.union(r), "left_semi")
 
     if isinstance(body, (ast.Exists, ast.Forall)):
-        q = _resolve(resolver, body.quantifier)
-        # If the inner body never references the quantified variable
-        # (typical after substitute_transition replaced "var.attr" with
-        # constants), the quantifier degenerates to an emptiness test:
-        # Exists = q nonempty AND body; Forall = q empty OR body. No
-        # crossJoin enters the plan — the cascade's narrowed recheck of a
-        # 1-row mutation relies on this.
-        inner_refs = referenced_vars(body.body)
-        if not any(v.startswith(body.var + ".") for v in inner_refs):
+        if _is_degenerate(body):
             # Degenerate quantifier (var unused — typical after transition
             # substitution): Exists = q nonempty AND body; Forall = q empty
-            # OR body. Kept lazy via a 1-row marker and constant-true
-            # semi/anti joins — the previous eager take(1) probe launched
-            # one driver job per substituted check, K+ jobs per cascade.
+            # OR body. No crossJoin enters the plan — the cascade's narrowed
+            # recheck of a 1-row mutation relies on this. Kept lazy via a
+            # 1-row marker and constant-true semi/anti joins — the previous
+            # eager take(1) probe launched one driver job per substituted
+            # check, K+ jobs per cascade.
+            q = _resolve(resolver, body.quantifier)
             marker = F.broadcast(q.limit(1).select(F.lit(1).alias("__m")))
             sat = satisfied_rows(df, body.body, resolver)
             if isinstance(body, ast.Exists):
                 return sat.join(marker, on=F.lit(True), how="left_semi")
             unsat = _value_match(df, sat, "left_anti")
             return sat.union(unsat.join(marker, on=F.lit(True), how="left_anti"))
-        if MAX_QUANTIFIER_ROWS is not None:
-            # The size guard needs a real count, but the verdict is stable
-            # for a given DataFrame object — and Database rotates Relation.df
-            # on every mutation, so caching on the object is exactly a
-            # per-(relation, db-version) cache. A 3-quantifier constraint
-            # over one relation counts it once, not three times.
-            cached = getattr(q, "_sakura_qsize", None)
-            if cached is not None and cached[0] == MAX_QUANTIFIER_ROWS:
-                qn = cached[1]
-            else:
-                qn = q.limit(MAX_QUANTIFIER_ROWS + 1).count()
-                try:
-                    q._sakura_qsize = (MAX_QUANTIFIER_ROWS, qn)
-                except AttributeError:
-                    pass
-            if qn > MAX_QUANTIFIER_ROWS:
-                raise errors.UnboundedQuantifier(
-                    f"{type(body).__name__} quantifier {body.quantifier!r} exceeds "
-                    f"{MAX_QUANTIFIER_ROWS} rows; the witness search would crossJoin "
-                    "it with every checked row. Narrow the quantifier, or set "
-                    "sakura_spark.icl.compiler.MAX_QUANTIFIER_ROWS = None to "
-                    "accept the cost."
-                )
-        prefixed = q.select(
-            *[F.col(c).alias(f"{body.var}.{c}") for c in q.columns]
-        ).dropDuplicates()
-        if isinstance(body, ast.Exists):
-            inner = body.body
-        else:
-            inner = ast.Not(body.body)
-        # Witness search: cross the candidate rows with the quantifier and
-        # keep df-rows having >= 1 (counter)example. Columns "var.attr" are
-        # visible to nested Vars; projected away (positionally — names may
-        # contain dots) before the final set op.
-        #
-        # Inner shadows outer (lib/constraint.ml:230-251 — tuple extension
-        # is a map update): if df already carries "var.*" columns from an
-        # enclosing quantifier reusing this variable name, crossJoining
-        # would duplicate them and every "var.attr" reference in the inner
-        # body would be ambiguous. Rename the outer binding's columns to
-        # unique placeholders so the inner body resolves against the inner
-        # binding only, then restore the names before the final projection.
-        shadowed = [c for c in df.columns if c.startswith(body.var + ".")]
-        if shadowed:
-            tok = next(_SHADOW_IDS)
-            alias = {c: f"__icl_shadow_{tok}_{i}" for i, c in enumerate(shadowed)}
-            base = df.select(
-                *[F.col(f"`{c}`").alias(alias.get(c, c)) for c in df.columns]
-            )
-        else:
-            alias = {}
-            base = df
-        crossed = base.crossJoin(F.broadcast(prefixed))
-        hits = (
-            satisfied_rows(crossed, inner, resolver)
-            .select(*[F.col(f"`{alias.get(c, c)}`").alias(c) for c in df.columns])
-            .dropDuplicates()
-        )
+        hits = _witness_hits(df, body, resolver)
         if isinstance(body, ast.Exists):
             return _value_match(df, hits, "left_semi")
         return _value_match(df, hits, "left_anti")
@@ -254,11 +192,96 @@ def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFra
     raise ValueError(f"unknown constraint body: {body!r}")
 
 
+def _satisfied_values(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
+    """The values of df's rows satisfying body, for a caller that uses
+    only the set: a value-based match against it, or a projection that
+    deduplicates. A non-degenerate Exists gives its witness hits without
+    the semi-join back onto df that restores every copy — one broadcast
+    join (with AQE off, one job) less per Exists."""
+    if isinstance(body, ast.Exists) and not _is_degenerate(body):
+        return _witness_hits(df, body, resolver)
+    return satisfied_rows(df, body, resolver)
+
+
+def _is_degenerate(body: ast.Body) -> bool:
+    """True when a quantifier's body never references its variable, so the
+    quantifier is only an emptiness test."""
+    return not any(v.startswith(body.var + ".") for v in referenced_vars(body.body))
+
+
+def _witness_hits(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
+    """The distinct df rows with a witness in a non-degenerate quantifier:
+    for Exists a binding satisfying the body, for Forall a binding
+    violating it (a counterexample). A set, not df's bag: the caller's
+    value-based semi/anti join restores every copy."""
+    q = _resolve(resolver, body.quantifier)
+    if MAX_QUANTIFIER_ROWS is not None:
+        # The size guard needs a real count, but the verdict is stable
+        # for a given DataFrame object — and Database rotates Relation.df
+        # on every mutation, so caching on the object is exactly a
+        # per-(relation, db-version) cache. A 3-quantifier constraint
+        # over one relation counts it once, not three times.
+        cached = getattr(q, "_sakura_qsize", None)
+        if cached is not None and cached[0] == MAX_QUANTIFIER_ROWS:
+            qn = cached[1]
+        else:
+            qn = q.limit(MAX_QUANTIFIER_ROWS + 1).count()
+            try:
+                q._sakura_qsize = (MAX_QUANTIFIER_ROWS, qn)
+            except AttributeError:
+                pass
+        if qn > MAX_QUANTIFIER_ROWS:
+            raise errors.UnboundedQuantifier(
+                f"{type(body).__name__} quantifier {body.quantifier!r} exceeds "
+                f"{MAX_QUANTIFIER_ROWS} rows; the witness search would crossJoin "
+                "it with every checked row. Narrow the quantifier, or set "
+                "sakura_spark.icl.compiler.MAX_QUANTIFIER_ROWS = None to "
+                "accept the cost."
+            )
+    prefixed = q.select(
+        *[F.col(c).alias(f"{body.var}.{c}") for c in q.columns]
+    ).dropDuplicates()
+    if isinstance(body, ast.Exists):
+        inner = body.body
+    else:
+        inner = ast.Not(body.body)
+    # Witness search: cross the candidate rows with the quantifier and
+    # keep df-rows having >= 1 (counter)example. Columns "var.attr" are
+    # visible to nested Vars; projected away (positionally — names may
+    # contain dots) before the caller's set op.
+    #
+    # Inner shadows outer (lib/constraint.ml:230-251 — tuple extension
+    # is a map update): if df already carries "var.*" columns from an
+    # enclosing quantifier reusing this variable name, crossJoining
+    # would duplicate them and every "var.attr" reference in the inner
+    # body would be ambiguous. Rename the outer binding's columns to
+    # unique placeholders so the inner body resolves against the inner
+    # binding only, then restore the names before the final projection.
+    shadowed = [c for c in df.columns if c.startswith(body.var + ".")]
+    if shadowed:
+        tok = next(_SHADOW_IDS)
+        alias = {c: f"__icl_shadow_{tok}_{i}" for i, c in enumerate(shadowed)}
+        base = df.select(
+            *[F.col(f"`{c}`").alias(alias.get(c, c)) for c in df.columns]
+        )
+    else:
+        alias = {}
+        base = df
+    crossed = base.crossJoin(F.broadcast(prefixed))
+    # This level projects to df's columns and deduplicates, so the inner
+    # body's satisfied values suffice.
+    return (
+        _satisfied_values(crossed, inner, resolver)
+        .select(*[F.col(f"`{alias.get(c, c)}`").alias(c) for c in df.columns])
+        .dropDuplicates()
+    )
+
+
 def violations(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
     """Rows of df violating body (empty == constraint holds). Value-based:
     every copy of a violating value appears; copies of satisfying values
     never do (per-row semantics even on bag inputs)."""
-    return _value_match(df, satisfied_rows(df, body, resolver), "left_anti")
+    return _value_match(df, _satisfied_values(df, body, resolver), "left_anti")
 
 
 def referenced_vars(body: ast.Body) -> set[str]:

@@ -12,12 +12,17 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sakura_spark import errors
+from sakura_spark.algebra import local_frame
 from sakura_spark.database import Database
 from sakura_spark.management.merge import PREFER_LEFT, merge_databases
 from sakura_spark.management.store import SnapshotStore
+
+_BRANCH = StructType([StructField("name", StringType()), StructField("hash", StringType())])
+_HEAD = StructType([StructField("branch", StringType())])
 
 
 class BranchManager:
@@ -125,10 +130,7 @@ class BranchManager:
     # --- virtual relations -------------------------------------------------
 
     def virtual_frames(self, spark: SparkSession) -> dict[str, DataFrame]:
-        rows = [Row(name=n, hash=h) for n, h in sorted(self.branches.items())]
         return {
-            "sakura:branch": spark.createDataFrame(rows or [], "name string, hash string"),
-            "sakura:head": spark.createDataFrame(
-                [Row(branch=self.head)] if self.head else [], "branch string"
-            ),
+            "sakura:branch": local_frame(spark, sorted(self.branches.items()), _BRANCH),
+            "sakura:head": local_frame(spark, [(self.head,)] if self.head else [], _HEAD),
         }

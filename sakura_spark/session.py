@@ -3,9 +3,12 @@
 Local testing runs a single JVM (local[N]); the configuration is written so
 the same code lands well on a 1000-executor cluster: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), shuffle partitions
-sized to the parallelism actually available, Arrow enabled for the few
+sized to the parallelism actually available, Arrow enabled for the
 Pandas-UDF paths, and UTC timezone pinned so results compare bit-for-bit
-against the DuckDB oracle.
+against the DuckDB oracle. Statement rows (inserted/deleted tuples, DRL
+literals, empty and catalog relations) enter Spark as Arrow-built JVM
+``LocalRelation``s through ``algebra.local_frame``, independent of the
+Arrow conf.
 """
 
 from __future__ import annotations

@@ -27,6 +27,12 @@ def _binding_value(b, env):
     return b.value
 
 
+def _known(*values):
+    """A comparison or membership test with a NULL operand never holds:
+    Spark's filter/join drops it, and Not complements the satisfied set."""
+    return all(v is not None for v in values)
+
+
 _CMP = {
     "lt": lambda a, b: a < b,
     "lte": lambda a, b: a <= b,
@@ -39,14 +45,16 @@ _CMP = {
 
 def _eval(body, env, rels):
     if isinstance(body, ast.Cmp):
-        return _CMP[body.op](_binding_value(body.left, env), _binding_value(body.right, env))
+        left, right = _binding_value(body.left, env), _binding_value(body.right, env)
+        return _known(left, right) and _CMP[body.op](left, right)
     if isinstance(body, ast.Between):
-        v = _binding_value(body.value, env)
-        return _binding_value(body.low, env) <= v <= _binding_value(body.high, env)
+        v, lo, hi = (_binding_value(b, env) for b in (body.value, body.low, body.high))
+        return _known(v, lo, hi) and lo <= v <= hi
     if isinstance(body, ast.MemberOf):
         target = rels[body.target]
         return any(
-            all(row[a] == _binding_value(b, env) for a, b in body.bindings)
+            all(_known(row[a], _binding_value(b, env)) and row[a] == _binding_value(b, env)
+                for a, b in body.bindings)
             for row in target
         )
     if isinstance(body, ast.Not):
@@ -200,3 +208,80 @@ def test_shadowed_quantifier_matches_naive_evaluator(spark, body):
     got_bad = {(r.x, r.y) for r in violations(df, body, rels).collect()}
     assert got_sat == expected_sat
     assert got_bad == set(xy) - expected_sat
+
+
+# --- chains of distinct quantified variables ---------------------------------
+#
+# Exists/Forall chains of depth 2-3 over distinct variables whose innermost
+# body reads every outer variable: no level is degenerate, so each is a real
+# witness search, and a directly nested Exists hands its witnessed set to
+# the enclosing level. The checked frame and the quantifier are bags with
+# duplicate rows and NULLs: satisfied_rows and violations must return every
+# copy of a value, so they are compared as multisets.
+
+_NVALS = st.one_of(st.none(), st.integers(0, 3))
+
+
+@st.composite
+def _chain(draw):
+    depth = draw(st.integers(2, 3))
+    body = None
+    for i in range(depth):
+        other = [ast.Var("x"), ast.Var("y")] + [ast.Var(f"q{j}.qa") for j in range(i)]
+        c = ast.Cmp(draw(st.sampled_from(list(_CMP))), ast.Var(f"q{i}.qa"),
+                    draw(st.sampled_from(other)))
+        body = c if body is None else draw(st.sampled_from([ast.And, ast.Or]))(body, c)
+    for i in reversed(range(depth)):
+        body = draw(st.sampled_from([ast.Exists, ast.Forall]))(f"q{i}", "Q", body)
+    return body
+
+
+def _check_multisets(spark, body, xy, qa):
+    df = spark.createDataFrame(xy, "x long, y long")
+    rels = {"Q": spark.createDataFrame(qa, "qa long")}
+    py_rels = {"Q": [{"qa": q} for (q,) in qa]}
+    key = lambda r: tuple((v is None, v or 0) for v in r)  # noqa: E731
+    sat = sorted((r for r in xy if _eval(body, {"x": r[0], "y": r[1]}, py_rels)), key=key)
+    bad = sorted((r for r in xy if not _eval(body, {"x": r[0], "y": r[1]}, py_rels)), key=key)
+    assert sorted((tuple(r) for r in satisfied_rows(df, body, rels).collect()), key=key) == sat
+    assert sorted((tuple(r) for r in violations(df, body, rels).collect()), key=key) == bad
+
+
+@given(
+    body=_chain(),
+    xy=st.lists(st.tuples(_NVALS, _NVALS), min_size=0, max_size=6),
+    qa=st.lists(st.tuples(_NVALS), min_size=0, max_size=4),
+)
+@settings(
+    max_examples=diff_examples(12, 3),
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+def test_distinct_variable_chains_match_naive_evaluator(spark, body, xy, qa):
+    _check_multisets(spark, body, xy, qa)
+
+
+def _lte_chain(kinds):
+    """The job-count test's shape: q0.qa <= v and q1.qa <= v ... under
+    the given quantifier kinds, outermost first."""
+    body = None
+    for i in range(len(kinds)):
+        c = ast.Cmp("lte", ast.Var(f"q{i}.qa"), ast.Var("y"))
+        body = c if body is None else ast.And(body, c)
+    for i in reversed(range(len(kinds))):
+        body = kinds[i](f"q{i}", "Q", body)
+    return body
+
+
+_E, _A = ast.Exists, ast.Forall
+
+
+@pytest.mark.parametrize(
+    "kinds", [(_E, _E), (_E, _E, _E), (_A, _E, _E), (_E, _A, _E), (_E, _E, _A)],
+    ids=lambda ks: "".join("E" if k is _E else "A" for k in ks),
+)
+def test_pinned_chains_on_bags_with_nulls(spark, kinds):
+    xy = [(0, 0), (0, 0), (1, 2), (1, 2), (2, None), (None, 3), (3, 3), (None, None)]
+    qa = [(1,), (2,), (2,), (None,)]
+    _check_multisets(spark, _lte_chain(kinds), xy, qa)
+    _check_multisets(spark, _lte_chain(kinds), xy, [(q,) for (q,) in qa if q is not None])
