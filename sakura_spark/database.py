@@ -10,6 +10,14 @@ Capability-parity with the reference's management/manipulation layer
   keyed by relation hash, database manifest keyed by the Merkle-root
   database hash — giving time travel, branches, diff and 3-way merge
   (management/*);
+* relation hashes are incremental: each Relation keeps the set-homomorphic
+  Digest its hash is finalized from (hashing.Digest), and every statement
+  adds the digest of the tuples it inserts or removes to the aggregate it
+  already runs, so it knows the new hash without an extra job. A snapshot
+  of such a relation is one staged parquet write, or nothing when the
+  store already holds that hash. Only a relation whose digest is unknown
+  (a mounted frame, a merged relation, a load this process never hashed)
+  is rescanned by ``relation_hash``, once;
 * constraint enforcement is whole-batch: each ICL constraint compiles to a
   violations-DataFrame (icl/compiler), with polarity-driven cascade
   narrowing (SURVEY §4.3) instead of the reference's per-tuple focused
@@ -26,10 +34,9 @@ History depth is capped at 128 states (lib/management/database.ml:45).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -38,7 +45,9 @@ from sakura_spark.algebra import local_frame
 from sakura_spark.domains import Domain, DomainRegistry, schema_to_struct
 from sakura_spark.hashing import (
     TUPLE_HASH_COL,
+    Digest,
     database_hash,
+    digest_word_sums,
     relation_hash,
     schema_signature,
     with_tuple_hash,
@@ -83,6 +92,9 @@ class Relation:
     schema_pairs: list[tuple[str, str]]  # (attr, domain)
     df: DataFrame
     hash: str | None = None  # computed lazily on snapshot
+    # The hashing Digest of df's extension, kept through every statement;
+    # None when unknown. Known implies df is duplicate-free.
+    digest: Digest | None = None
 
     @property
     def attrs(self) -> list[str]:
@@ -132,7 +144,7 @@ class Database:
                 raise errors.UnknownDomain(dom)
         struct = schema_to_struct(schema_pairs, self.registry)
         empty = local_frame(self.spark, [], struct)
-        self.state.relations[name] = Relation(name, list(schema_pairs), empty)
+        self.state.relations[name] = Relation(name, list(schema_pairs), empty, digest=Digest())
         self._mutated(name)
 
     def retract_relation(self, name: str) -> None:
@@ -146,6 +158,7 @@ class Database:
     def clear_relation(self, name: str) -> None:
         rel = self._rel(name)
         rel.df = local_frame(self.spark, [], rel.df.schema)
+        rel.digest = Digest()
         self._mutated(name)
 
     def register_domain(self, domain: Domain) -> None:
@@ -156,7 +169,9 @@ class Database:
         schema derived from the Spark types, contents read-through (not
         snapshotted until a mutation touches it). The Spark-native analogue
         of the reference's immutable generator-backed relations
-        (lib/manipulation.ml:815-837)."""
+        (lib/manipulation.ml:815-837). The frame may be a bag: its digest
+        is unknown until the first snapshot rescans it, and that snapshot
+        stores its distinct rows."""
         from sakura_spark.domains import domain_for_spark_type
 
         if name in self.state.relations:
@@ -189,12 +204,13 @@ class Database:
         domain checks, duplicate rejection, immediate constraints, cascade.
 
         The batch count, in-batch duplicate check, against-extension
-        duplicate check and domain check all fold into ONE aggregation job
-        (a left join of batch hashes against existing hashes feeding four
-        aggregates) — the bulk-ingest path launches a single Spark job up to
-        the constraint checks. For bulk loads also construct the Database
-        with ``snapshot_on_mutation=False`` and snapshot once at
-        ``commit()``.
+        duplicate check, domain check and the batch's hash Digest all fold
+        into ONE aggregation (a left join of batch hashes against existing
+        hashes) — the bulk-ingest path launches a single Spark action up to
+        the constraint checks. An accepted batch is duplicate-free and
+        disjoint from the extension, so its digest adds to the relation's.
+        For bulk loads also construct the Database with
+        ``snapshot_on_mutation=False`` and snapshot once at ``commit()``.
         """
         from sakura_spark.domains import domain_violation_cond
 
@@ -215,6 +231,7 @@ class Database:
                 F.sum(
                     F.when(domain_violation_cond(rel.schema_pairs, self.registry), 1).otherwise(0)
                 ).alias("domain_bad"),
+                *digest_word_sums(),
             )
             .collect()[0]
         )
@@ -244,6 +261,8 @@ class Database:
             + self._cascade(relation, batch, event="insert", resolver=resolver)
         )
         rel.df = new_df
+        if rel.digest is not None:
+            rel.digest += Digest.of_row(stats)
         self._mutated(relation)
         return n
 
@@ -252,15 +271,18 @@ class Database:
         match; missing tuples are an error (retract_tuple semantics)."""
         rel = self._rel(relation)
         batch = self._as_batch(rel, rows).dropDuplicates()
-        # One job for batch count + presence check (the extension is a set,
-        # so the left join cannot fan out).
+        # One job for batch count + presence check + the Digest of the
+        # matched extension rows (a relation with a known digest is a set,
+        # so the left join cannot fan out). The digest sums the EXTENSION's
+        # tuple hashes, so it is exactly what the anti-join removes.
+        extension = with_tuple_hash(rel.df.select(*rel.attrs), relation)
         stats = (
-            batch.join(
-                rel.df.select(*rel.attrs).withColumn("__present", F.lit(1)),
-                on=rel.attrs,
-                how="left",
+            batch.join(extension.withColumn("__present", F.lit(1)), on=rel.attrs, how="left")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count("__present").alias("present"),
+                *digest_word_sums(),
             )
-            .agg(F.count(F.lit(1)).alias("n"), F.count("__present").alias("present"))
             .collect()[0]
         )
         n, present = stats["n"], stats["present"]
@@ -268,40 +290,45 @@ class Database:
             raise errors.UnknownTuple(
                 f"delete_tuples: {n - present} tuples not present in {relation}"
             )
-        return self._apply_delete(rel, relation, batch, n)
+        return self._apply_delete(rel, relation, batch, Digest.of_row(stats))
 
-    def _apply_delete(self, rel: "Relation", relation: str, batch: DataFrame, n: int) -> int:
+    def _apply_delete(
+        self, rel: "Relation", relation: str, batch: DataFrame, removed: Digest
+    ) -> int:
         """Shared delete tail: cascade, then swap in the anti-joined
-        extension. `batch` must be duplicate-free rows known present in
-        the extension (delete_tuples proves it with its presence job;
-        delete_where's semijoin guarantees it by construction)."""
+        extension; returns the number of deleted tuples. `batch` must be
+        duplicate-free rows known present in the extension, and `removed`
+        the digest of the extension rows they match (delete_tuples proves
+        both with its presence job; delete_where's semijoin guarantees
+        them by construction)."""
         new_df = rel.df.join(batch, on=rel.attrs, how="left_anti")
         resolver = self._resolver_with(relation, new_df)
         self._run_violation_checks(
             self._cascade(relation, batch, event="delete", resolver=resolver)
         )
         rel.df = new_df
+        if rel.digest is not None:
+            rel.digest -= removed
         self._mutated(relation)
-        return n
+        return removed.n
 
     def assign(self, relation: str, df: DataFrame) -> int:
         """Assign (lib/dml/executor.ml:79-88): materialize a query and
         replace the target's contents (clear + insert).
 
-        The domain check and the returned row count fold into ONE
-        aggregation job (round-13 optimization — the same fold
-        insert_tuples already does); the old shape paid a
-        domain-violations count() plus a separate rel.df.count() after
-        the swap."""
+        The domain check, the returned row count and the new extension's
+        hash Digest fold into ONE aggregation (the same fold insert_tuples
+        does)."""
         from sakura_spark.domains import domain_violation_cond
 
         rel = self._rel(relation)
         batch = df.select(*rel.attrs).dropDuplicates()
-        stats = batch.agg(
+        stats = with_tuple_hash(batch, relation).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 F.when(domain_violation_cond(rel.schema_pairs, self.registry), 1).otherwise(0)
             ).alias("domain_bad"),
+            *digest_word_sums(),
         ).collect()[0]
         if stats["domain_bad"]:
             raise errors.DomainViolation(
@@ -320,6 +347,7 @@ class Database:
             + self._cascade(relation, removed, event="delete", resolver=resolver)
         )
         rel.df = batch
+        rel.digest = Digest.of_row(stats)
         self._mutated(relation)
         return stats["n"]
 
@@ -331,12 +359,11 @@ class Database:
         """DeleteWhere (lib/dml/executor.ml:98-126): delete rows matching a
         predicate relation on their common attributes (semijoin form).
 
-        One validation job, not three (round-13 optimization, guide §1.2
-        scheduler overhead): the doomed rows are a semijoin OF the
-        extension, so they are present and duplicate-free BY CONSTRUCTION
-        — delete_tuples' presence-check job and its dropDuplicates
-        exchange would re-prove what the semijoin already guarantees.
-        A single count() doubles as the empty-predicate early exit."""
+        The doomed rows are a semijoin OF the extension, so they are
+        present and duplicate-free BY CONSTRUCTION — delete_tuples'
+        presence check would re-prove what the semijoin already
+        guarantees. One aggregate over them gives both the count (which
+        doubles as the empty-predicate early exit) and their Digest."""
         rel = self._rel(relation)
         common = [c for c in rel.attrs if c in predicate_rel.columns]
         if not common:
@@ -344,10 +371,13 @@ class Database:
         doomed = rel.df.join(
             predicate_rel.select(*common).dropDuplicates(), on=common, how="left_semi"
         )
-        n = doomed.count()
+        stats = with_tuple_hash(doomed, relation).agg(
+            F.count(F.lit(1)).alias("n"), *digest_word_sums()
+        ).collect()[0]
+        n = stats["n"]
         if not n:
             return 0
-        return self._apply_delete(rel, relation, doomed, n)
+        return self._apply_delete(rel, relation, doomed, Digest.of_row(stats))
 
     # ------------------------------------------------------------ queries
 
@@ -411,46 +441,8 @@ class Database:
     def _snapshot(self) -> str:
         manifest: dict = {"name": self.name, "relations": {}, "constraints": {}}
         for rname, rel in sorted(self.state.relations.items()):
-            sig = schema_signature(rel.schema_pairs)
             if rel.hash is None:
-                # Round-13 optimization (guide §2.4/§5): write FIRST to a
-                # temp dir (one execution of the mutation lineage), hash
-                # the WRITTEN parquet (a cheap re-scan, not a second run
-                # of the anti-join/union chain), then move the dir to its
-                # content-addressed key. The old order — hash-over-
-                # lineage then write-over-lineage — executed every
-                # mutation chain twice per commit (and AQE splits each
-                # into several jobs: the DCL fixture build dropped from
-                # 131 to ~90 Spark jobs). relation_hash is a commutative
-                # reduction over per-tuple sha256s, so hashing the
-                # read-back yields the identical hash (content-equal,
-                # order-free by construction).
-                import shutil
-                import tempfile
-
-                tmp = tempfile.mkdtemp(
-                    dir=os.path.join(self.store.root, "relations"),
-                    prefix="__staging_",
-                )
-                staged = os.path.join(tmp, "data")
-                rel.df.write.mode("overwrite").parquet(staged)
-                written = self.spark.read.parquet(staged)
-                rel.hash = relation_hash(written, rname, sig)
-                final = self.store.relation_path(rel.hash)
-                if os.path.exists(final):
-                    shutil.rmtree(tmp, ignore_errors=True)
-                else:
-                    os.replace(staged, final)
-                    shutil.rmtree(tmp, ignore_errors=True)
-                # Seed the store's per-hash schema cache from the write we
-                # just made, so the read-back below (and every later
-                # reader) skips the parquet schema-inference job.
-                self.store._schema_cache.setdefault(rel.hash, written.schema)
-                # Truncate the lineage: later readers (diff, merge, the
-                # entry's final select) scan the snapshot instead of
-                # re-running the mutation chain — the exact state
-                # Database.load would rebuild.
-                rel.df = self.store.get_relation(self.spark, rel.hash)
+                self._store_relation(rel)
             else:
                 self.store.put_relation(rel.hash, rel.df)
             manifest["relations"][rname] = {
@@ -475,6 +467,38 @@ class Database:
         self.hash = new_hash
         return new_hash
 
+    def _store_relation(self, rel: Relation) -> None:
+        """Give a changed relation its hash and its snapshot, then point
+        its frame at the snapshot (later readers scan the parquet instead
+        of re-running the mutation chain — the state Database.load would
+        rebuild).
+
+        With a known Digest the hash is arithmetic, and the snapshot is
+        one staged write through ``put_relation`` — or nothing, when the
+        store already holds that hash (insert-then-delete, a revert).
+        Otherwise the frame is written once to staging and the WRITTEN
+        parquet is rescanned by ``relation_hash`` (a cheap scan, not a
+        second run of the mutation lineage); a frame that held duplicate
+        rows (a mounted bag) is stored deduplicated, so every snapshot —
+        and so every relation with a known digest — is a set."""
+        sig = schema_signature(rel.schema_pairs)
+        schema = rel.df.schema
+        if rel.digest is not None:
+            rel.hash = rel.digest.hash(rel.name, sig)
+            self.store.put_relation(rel.hash, rel.df)
+        else:
+            with self.store.staging() as staged:
+                rel.df.write.parquet(staged)
+                written = self.spark.read.schema(schema).parquet(staged)
+                h = relation_hash(written, rel.name, sig)
+                rel.hash, rel.digest = str(h), h.digest
+                if h.had_duplicates:
+                    self.store.put_relation(rel.hash, written.dropDuplicates())
+                else:
+                    self.store.publish(staged, rel.hash)
+        self.store.remember(rel.hash, schema, rel.digest)
+        rel.df = self.store.get_relation(self.spark, rel.hash)
+
     @classmethod
     def load(
         cls, spark: SparkSession, db_hash: str, store: SnapshotStore, name: str | None = None
@@ -493,7 +517,9 @@ class Database:
         for rname, entry in manifest["relations"].items():
             pairs = [tuple(p) for p in entry["schema"]]
             df = store.get_relation(spark, entry["hash"])
-            db.state.relations[rname] = Relation(rname, pairs, df, hash=entry["hash"])
+            db.state.relations[rname] = Relation(
+                rname, pairs, df, hash=entry["hash"], digest=store.digest(entry["hash"])
+            )
         for cname, centry in manifest.get("constraints", {}).items():
             db.state.constraints[cname] = Constraint(
                 cname, centry["relation"], icl_ast.body_from_json(centry["body"]), centry["timing"]
@@ -511,10 +537,21 @@ class Database:
             raise errors.UnknownRelation(name) from None
 
     def _as_batch(self, rel: Relation, rows: list[dict] | DataFrame) -> DataFrame:
+        """Statement rows as a frame in the relation's attribute order.
+        Dict values bind by attribute NAME, whatever order the statement
+        listed them in; a missing attribute is a NULL, which the
+        non-nullable schema rejects."""
         if isinstance(rows, DataFrame):
             return rows.select(*rel.attrs)
+        attrs = rel.attrs
+        ordered = []
+        for r in rows:
+            unknown = set(r) - set(attrs)
+            if unknown:
+                raise ValueError(f"unknown attributes {sorted(unknown)} for relation {rel.name}")
+            ordered.append(tuple(r.get(a) for a in attrs))
         struct = schema_to_struct(rel.schema_pairs, self.registry)
-        return local_frame(self.spark, [Row(**r) for r in rows], struct)
+        return local_frame(self.spark, ordered, struct)
 
     def _immediate_checks(
         self, relation: str, rows: DataFrame, resolver, message: str
@@ -547,39 +584,41 @@ class Database:
 
     def _run_violation_checks(self, checks: list[Check]) -> None:
         """Run a statement's per-constraint violation queries as ONE Spark
-        job — the only place constraint checks reach Spark.
+        action — the only place constraint checks reach Spark.
 
-        Instead of one `.count()` action per constraint (K+ job launches per
-        mutation on a K-constraint schema — pure scheduler overhead at
-        ingest rates), every violations frame is projected to a literal tag
-        column, unioned, and aggregated with a single `groupBy(tag).count()`
-        action; a single check is one `.count()`. The first violated check
-        in submission order raises.
+        Every violations frame is projected to a literal tag column,
+        unioned, and aggregated with a single ``groupBy(tag).count()``
+        action, whatever the number of checks (a per-constraint
+        ``.count()`` launches K jobs per mutation on a K-constraint schema
+        — pure scheduler overhead at ingest rates). A grouped count also
+        lets Catalyst fold a check over a driver-side batch (a filter on a
+        ``LocalRelation``) into an empty local result that needs no job,
+        which a global ``count()`` would still run. No checks, no action.
+        The first violated check in submission order raises.
         """
-        # Sequential and lazy: a single check, or the fallback below.
-        counts = (df.count() for *_, df in checks)
-        if len(checks) > 1:
-            tagged = None
-            for i, (*_, df) in enumerate(checks):
-                t = df.select(F.lit(i).alias("__constraint"))
-                tagged = t if tagged is None else tagged.unionAll(t)
-            try:
-                got = {r["__constraint"]: r["n"] for r in
-                       tagged.groupBy("__constraint").agg(F.count(F.lit(1)).alias("n")).collect()}
-                counts = [got.get(i, 0) for i in range(len(checks))]
-            except Exception:
-                # A runtime error in any single constraint's query fails the
-                # whole batched job as a raw Spark error — masking WHICH
-                # constraint is broken, and masking a genuine violation an
-                # earlier-ordered constraint would have raised first. Fall
-                # back to the sequential counts: ordered attribution is
-                # restored, a genuine earlier violation raises
-                # ConstraintViolation, and the broken query's own error
-                # surfaces from its position in the order. The sequential
-                # pass is authoritative: if every check runs clean, the
-                # batched failure was job-level (not a constraint), and
-                # validation legitimately passes.
-                pass
+        if not checks:
+            return
+        tagged = None
+        for i, (*_, df) in enumerate(checks):
+            t = df.select(F.lit(i).alias("__constraint"))
+            tagged = t if tagged is None else tagged.unionAll(t)
+        try:
+            got = {r["__constraint"]: r["n"] for r in
+                   tagged.groupBy("__constraint").agg(F.count(F.lit(1)).alias("n")).collect()}
+            counts = [got.get(i, 0) for i in range(len(checks))]
+        except Exception:
+            # A runtime error in any single constraint's query fails the
+            # whole batched job as a raw Spark error — masking WHICH
+            # constraint is broken, and masking a genuine violation an
+            # earlier-ordered constraint would have raised first. Fall
+            # back to sequential, lazy counts: ordered attribution is
+            # restored, a genuine earlier violation raises
+            # ConstraintViolation, and the broken query's own error
+            # surfaces from its position in the order. The sequential
+            # pass is authoritative: if every check runs clean, the
+            # batched failure was job-level (not a constraint), and
+            # validation legitimately passes.
+            counts = (df.count() for *_, df in checks)
         for (name, relation, message, _), bad in zip(checks, counts):
             if bad:
                 raise errors.ConstraintViolation(name, relation, f"{bad} {message}")

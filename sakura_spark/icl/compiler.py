@@ -4,13 +4,25 @@
 satisfying the body; ``violations`` is the complement. Everything compiles
 to joins/filters on DataFrames:
 
+    Cmp / Between  -> Column predicates (the intensional-relation rewrite);
+                      a tree of them under And/Or/Not is ONE filter
     MemberOf       -> left-semi join on the bindings (FK check)
-    Not            -> set difference against the satisfied subset
+    Not            -> the violating rows of its body (below)
     And / Or       -> intersect / union of satisfied subsets
     Exists         -> semi-join against the quantifier with the body as the
                       join condition (namespaced "var.attr" columns)
     Forall         -> no-counterexample: diff against Exists(var, Not(body))
-    Cmp / Between  -> Column predicates (the intensional-relation rewrite)
+
+``violations`` is compiled directly, by pushing the negation into the body,
+not as "rows minus satisfied rows" (Catalyst cannot see that
+``anti(df, semi(df, T))`` is ``anti(df, T)``):
+
+    predicate tree -> filter(NOT sat), NULL counting as unsatisfied
+    MemberOf       -> left-anti join on the bindings
+    Not(x)         -> satisfied(x)
+    Or(a, b)       -> violating(violating(a), b)
+    And(a, b)      -> violating(a) UNION violating(satisfied(a), b), disjoint
+    Exists/Forall  -> anti/semi join on witness/counterexample hits
 
 The reference evaluates these per-tuple with nested scans
 (lib/constraint.ml:166-251); compiled as joins the whole-batch check is one
@@ -99,62 +111,92 @@ def _value_match(df: DataFrame, keep: DataFrame, how: str) -> DataFrame:
     return left.join(right, on=cond, how=how)
 
 
-def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
-    """Rows of df satisfying body. df's schema is preserved exactly."""
+def _sat(body: ast.Body) -> Column | None:
+    """The satisfaction column of a predicate-only body — Cmp, Between,
+    intensional MemberOf, and And/Or/Not of these — or None when the body
+    needs a join. Two-valued: a NULL comparison counts as unsatisfied, as
+    a filter drops it, so ``NOT sat`` keeps a row with a NULL operand as
+    a violation."""
     if isinstance(body, ast.Cmp):
-        return df.filter(_CMP[body.op](_binding_col(body.left), _binding_col(body.right)))
-
-    if isinstance(body, ast.Between):
+        cond = _CMP[body.op](_binding_col(body.left), _binding_col(body.right))
+    elif isinstance(body, ast.Between):
         v = _binding_col(body.value)
-        return df.filter((v >= _binding_col(body.low)) & (v <= _binding_col(body.high)))
-
-    if isinstance(body, ast.MemberOf):
+        cond = (v >= _binding_col(body.low)) & (v <= _binding_col(body.high))
+    elif isinstance(body, ast.MemberOf) and prelude.is_intensional(body.target):
         # Intensional target (comparison/arithmetic relations): membership is
         # the predicate itself (lib/manipulation.ml:120-147 intensional path).
-        if prelude.is_intensional(body.target):
-            rel = prelude.PRELUDE[body.target]
-            bound = {a: _binding_col(b) for a, b in body.bindings}
-            missing = [a for a in rel.attrs if a not in bound]
-            if missing:
-                raise ValueError(
-                    f"MemberOf {body.target}: all attributes must be bound, missing {missing}"
-                )
-            cond = rel.predicate(bound)
-            if rel.guard is not None:
-                cond = cond & rel.guard(bound)
-            return df.filter(cond)
-        target = _resolve(resolver, body.target)
-        # Build the join: target attr == Var column / Const literal.
-        tgt = target
-        conds = []
-        for attr, b in body.bindings:
-            if isinstance(b, ast.ConstVal):
-                tgt = tgt.filter(F.col(attr) == F.lit(b.value))
-            else:
-                conds.append((b.name, attr))
-        if not conds:
-            # Pure-constant binding: satisfied iff a matching row exists at
-            # all. Kept lazy: a 1-row broadcast marker semi-joined on a
-            # constant-true condition keeps/drops every df row inside the
-            # enclosing job, instead of probing eagerly with take(1) — which
-            # launched one extra driver job per node during validation.
-            marker = F.broadcast(tgt.limit(1).select(F.lit(1).alias("__m")))
-            return df.join(marker, on=F.lit(True), how="left_semi")
-        # Positional aliases: the SAME Var may bind several target attrs
-        # (e.g. a=Var x AND b=Var x), so per-var aliases would collide;
-        # backticks because namespaced vars ("d.dept_id") put a dot in the
-        # referenced column name.
-        proj = tgt.select(
-            *[F.col(attr).alias(f"__icl_{i}") for i, (_, attr) in enumerate(conds)]
-        ).dropDuplicates()
-        cond = None
-        for i, (var, _) in enumerate(conds):
-            c = df[f"`{var}`"] == proj[f"__icl_{i}"]
-            cond = c if cond is None else (cond & c)
-        return df.join(proj, on=cond, how="left_semi")
+        rel = prelude.PRELUDE[body.target]
+        bound = {a: _binding_col(b) for a, b in body.bindings}
+        missing = [a for a in rel.attrs if a not in bound]
+        if missing:
+            raise ValueError(
+                f"MemberOf {body.target}: all attributes must be bound, missing {missing}"
+            )
+        cond = rel.predicate(bound)
+        if rel.guard is not None:
+            cond = cond & rel.guard(bound)
+    elif isinstance(body, ast.Not):
+        inner = _sat(body.body)
+        return None if inner is None else ~inner
+    elif isinstance(body, (ast.And, ast.Or)):
+        left, right = _sat(body.left), _sat(body.right)
+        if left is None or right is None:
+            return None
+        return (left & right) if isinstance(body, ast.And) else (left | right)
+    else:
+        return None
+    return F.coalesce(cond, F.lit(False))
+
+
+def _member_join(df: DataFrame, body: ast.MemberOf, resolver: Resolver, how: str) -> DataFrame:
+    """Semi (members) or anti (non-members) join of df against an
+    extensional MemberOf target on its bindings. A NULL binding matches
+    nothing, so it is a non-member."""
+    target = _resolve(resolver, body.target)
+    # Build the join: target attr == Var column / Const literal.
+    tgt = target
+    conds = []
+    for attr, b in body.bindings:
+        if isinstance(b, ast.ConstVal):
+            tgt = tgt.filter(F.col(attr) == F.lit(b.value))
+        else:
+            conds.append((b.name, attr))
+    if not conds:
+        # Pure-constant binding: satisfied iff a matching row exists at
+        # all. Kept lazy: a 1-row broadcast marker semi/anti-joined on a
+        # constant-true condition keeps/drops every df row inside the
+        # enclosing job, instead of probing eagerly with take(1) — which
+        # launched one extra driver job per node during validation.
+        marker = F.broadcast(tgt.limit(1).select(F.lit(1).alias("__m")))
+        return df.join(marker, on=F.lit(True), how=how)
+    # Positional aliases: the SAME Var may bind several target attrs
+    # (e.g. a=Var x AND b=Var x), so per-var aliases would collide;
+    # backticks because namespaced vars ("d.dept_id") put a dot in the
+    # referenced column name. No dropDuplicates: the join only answers
+    # membership (a broadcast build ignores duplicate keys), an FK
+    # target's attributes are usually its key already, and a dedup would
+    # add an exchange — one Spark job under AQE — to every check.
+    proj = tgt.select(
+        *[F.col(attr).alias(f"__icl_{i}") for i, (_, attr) in enumerate(conds)]
+    )
+    cond = None
+    for i, (var, _) in enumerate(conds):
+        c = df[f"`{var}`"] == proj[f"__icl_{i}"]
+        cond = c if cond is None else (cond & c)
+    return df.join(proj, on=cond, how=how)
+
+
+def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
+    """Rows of df satisfying body. df's schema is preserved exactly."""
+    cond = _sat(body)
+    if cond is not None:
+        return df.filter(cond)
+
+    if isinstance(body, ast.MemberOf):
+        return _member_join(df, body, resolver, "left_semi")
 
     if isinstance(body, ast.Not):
-        return _value_match(df, _satisfied_values(df, body.body, resolver), "left_anti")
+        return _violating(df, body.body, resolver)
 
     if isinstance(body, ast.And):
         left = satisfied_rows(df, body.left, resolver)
@@ -182,7 +224,7 @@ def satisfied_rows(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFra
             sat = satisfied_rows(df, body.body, resolver)
             if isinstance(body, ast.Exists):
                 return sat.join(marker, on=F.lit(True), how="left_semi")
-            unsat = _value_match(df, sat, "left_anti")
+            unsat = _violating(df, body.body, resolver)
             return sat.union(unsat.join(marker, on=F.lit(True), how="left_anti"))
         hits = _witness_hits(df, body, resolver)
         if isinstance(body, ast.Exists):
@@ -281,7 +323,50 @@ def violations(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
     """Rows of df violating body (empty == constraint holds). Value-based:
     every copy of a violating value appears; copies of satisfying values
     never do (per-row semantics even on bag inputs)."""
-    return _value_match(df, _satisfied_values(df, body, resolver), "left_anti")
+    return _violating(df, body, resolver)
+
+
+def _violating(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
+    """The rows of df violating body, compiled per node with the negation
+    pushed inward (module docstring). Every rule keeps every copy of a
+    violating row and no copy of a satisfying one; the two sides of an
+    And's union are disjoint, so no copy is counted twice."""
+    cond = _sat(body)
+    if cond is not None:
+        return df.filter(~cond)
+
+    if isinstance(body, ast.MemberOf):
+        return _member_join(df, body, resolver, "left_anti")
+
+    if isinstance(body, ast.Not):
+        return satisfied_rows(df, body.body, resolver)
+
+    if isinstance(body, ast.Or):
+        return _violating(_violating(df, body.left, resolver), body.right, resolver)
+
+    if isinstance(body, ast.And):
+        # Violates a, or satisfies a and violates b. A predicate side goes
+        # first: its satisfied rows are one filter.
+        first, second = body.left, body.right
+        if _sat(first) is None and _sat(second) is not None:
+            first, second = second, first
+        passed = satisfied_rows(df, first, resolver)
+        return _violating(df, first, resolver).union(_violating(passed, second, resolver))
+
+    if isinstance(body, (ast.Exists, ast.Forall)):
+        if _is_degenerate(body):
+            # Exists violates where q is empty or the body is violated;
+            # Forall only where q is nonempty and the body is violated.
+            q = _resolve(resolver, body.quantifier)
+            marker = F.broadcast(q.limit(1).select(F.lit(1).alias("__m")))
+            bad = _violating(df, body.body, resolver).join(marker, on=F.lit(True), how="left_semi")
+            if isinstance(body, ast.Forall):
+                return bad
+            return df.join(marker, on=F.lit(True), how="left_anti").union(bad)
+        hits = _witness_hits(df, body, resolver)
+        return _value_match(df, hits, "left_anti" if isinstance(body, ast.Exists) else "left_semi")
+
+    raise ValueError(f"unknown constraint body: {body!r}")
 
 
 def referenced_vars(body: ast.Body) -> set[str]:

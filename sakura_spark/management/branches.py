@@ -110,15 +110,19 @@ class BranchManager:
             pairs = [tuple(p) for p in res.schemas[name]]
             df = tuples.drop(TUPLE_HASH_COL)
             # A merged extension that IS an existing snapshot keeps its
-            # known content hash (merge.MergeResult.known_hashes): commit
-            # then skips the write+hash for it — the parquet is already in
-            # the store under that key (round-14 optimization).
+            # known content hash (merge.MergeResult.known_hashes) and, if
+            # this process knows it, its Digest: commit then skips the
+            # write+hash for it — the parquet is already in the store under
+            # that key. Any other merged relation is hashed by a rescan.
             known = res.known_hashes.get(name)
+            digest = self.store.digest(known) if known else None
             if name in base.state.relations:
                 rel = base.state.relations[name]
-                rel.df, rel.hash, rel.schema_pairs = df, known, pairs
+                rel.df, rel.hash, rel.schema_pairs, rel.digest = df, known, pairs, digest
             else:
-                base.state.relations[name] = Relation(name, pairs, df, hash=known)
+                base.state.relations[name] = Relation(
+                    name, pairs, df, hash=known, digest=digest
+                )
         # Merge-commit parents: keep both histories reachable for future LCA.
         base.history = [h for h in [lh, rh] if h] + [
             h for h in base.history if h not in (lh, rh)

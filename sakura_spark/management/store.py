@@ -19,9 +19,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from sakura_spark.hashing import Digest
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field and element nullable — the schema Spark
+    gives any parquet file it reads back."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class SnapshotStore:
@@ -29,27 +49,72 @@ class SnapshotStore:
         self.root = root or tempfile.mkdtemp(prefix="sakura_store_")
         os.makedirs(os.path.join(self.root, "relations"), exist_ok=True)
         os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
-        # Per-hash Spark schema cache: a snapshot is content-addressed, so
-        # its schema is immutable — the first read's footer inference is
-        # authoritative for every later read of the same key. Passing the
-        # schema explicitly skips the per-read parquet schema-inference
-        # job (one scheduled Spark job per get_relation: checkout, diff,
-        # merge and time travel all read snapshots repeatedly — round-14
-        # optimization, guide §1.2 scheduler overhead).
-        self._schema_cache: dict = {}
+        # Per-hash facts this process learned (``remember``). A snapshot is
+        # content-addressed, so both are immutable per key:
+        # * the Spark schema — passing it explicitly skips the per-read
+        #   parquet schema-inference job (checkout, diff, merge and time
+        #   travel all read snapshots repeatedly);
+        # * the relation's hashing Digest — Database.load, checkout and
+        #   the wire server's conflict replay hand it to the loaded
+        #   relation, whose next statement then derives its hash from its
+        #   delta instead of rescanning.
+        self._schema_cache: dict[str, T.StructType] = {}
+        self._digests: dict[str, Digest] = {}
 
     # --- relation snapshots (parquet, content-addressed) -------------------
 
     def relation_path(self, rel_hash: str) -> str:
         return os.path.join(self.root, "relations", rel_hash)
 
+    @contextmanager
+    def staging(self) -> Iterator[str]:
+        """A fresh path to write a relation's parquet to before it has a
+        key; ``publish`` moves it to its key. Whatever is left there is
+        removed on exit, also when the write raises, so a failed write
+        never leaves anything that ``has_relation`` could report."""
+        tmp = tempfile.mkdtemp(dir=os.path.join(self.root, "relations"), prefix="__staging_")
+        try:
+            yield os.path.join(tmp, "data")
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def publish(self, staged: str, rel_hash: str) -> None:
+        """Move a complete staged write to its content-addressed key. An
+        existing key already holds the same content, so it is kept."""
+        final = self.relation_path(rel_hash)
+        if os.path.exists(final):
+            return
+        try:
+            os.replace(staged, final)
+        except OSError:
+            # Another writer published the same key in between.
+            if not os.path.exists(final):
+                raise
+
     def put_relation(self, rel_hash: str, df: DataFrame) -> str:
         """Write-once: identical content arrives at the same key and is
-        skipped (the reference's value dedup, docs/architecture.org:147-157)."""
+        skipped (the reference's value dedup, docs/architecture.org:147-157).
+        The parquet is staged and moved into place complete."""
         path = self.relation_path(rel_hash)
         if not os.path.exists(path):
-            df.write.mode("ignore").parquet(path)
+            with self.staging() as staged:
+                df.write.parquet(staged)
+                self.publish(staged, rel_hash)
         return path
+
+    def remember(
+        self, rel_hash: str, schema: T.StructType, digest: Digest | None = None
+    ) -> None:
+        """Record what this process knows of the snapshot at ``rel_hash``:
+        its schema (stored as Spark reads it back, every field nullable)
+        and, when known, its hashing Digest."""
+        self._schema_cache.setdefault(rel_hash, _nullable(schema))
+        if digest is not None:
+            self._digests[rel_hash] = digest
+
+    def digest(self, rel_hash: str) -> Digest | None:
+        """The Digest remembered for ``rel_hash``, or None."""
+        return self._digests.get(rel_hash)
 
     def get_relation(self, spark: SparkSession, rel_hash: str) -> DataFrame:
         schema = self._schema_cache.get(rel_hash)

@@ -20,6 +20,7 @@ from sakura_spark.icl import (
     violations,
 )
 from sakura_spark.icl.compiler import BOTH, NEGATIVE, POSITIVE
+from sakura_spark.management.store import SnapshotStore
 
 
 @pytest.fixture()
@@ -462,17 +463,20 @@ def test_forall_insert_into_quantifier_uses_substitution(spark, store):
 
 
 @pytest.mark.parametrize("statement", ["insert_tuples", "assign", "commit"])
-def test_insert_validation_launches_constant_job_count(spark, store, statement):
+def test_insert_validation_launches_constant_job_count(spark, tmp_path, statement):
     """A statement's constraint checks are ONE tagged aggregation job no
     matter how many constraints it checks (a per-constraint `.count()` loop
     launches K jobs per statement — scheduler overhead, not data work, at
     100 TB ingest). Measured via job-group job ids: the statement on a
     3-constraint relation must launch exactly as many Spark jobs as on a
     1-constraint relation — immediate constraints for insert and assign,
-    pending deferred constraints for commit."""
+    pending deferred constraints for commit. Each database has its own
+    store: both commit the same content, and a shared store would let the
+    second commit skip a write the first already made."""
     timing = DEFERRED if statement == "commit" else IMMEDIATE
 
     def make_db(name, n_constraints):
+        store = SnapshotStore(str(tmp_path / name))
         db = Database(spark, name, store=store, snapshot_on_mutation=False)
         db.create_relation("r", [("v", "integer")])
         for i in range(n_constraints):

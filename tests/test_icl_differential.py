@@ -16,7 +16,7 @@ from conftest import diff_examples
 from hypothesis import strategies as st
 
 from sakura_spark.icl import ast
-from sakura_spark.icl.compiler import satisfied_rows, violations
+from sakura_spark.icl.compiler import _value_match, satisfied_rows, violations
 
 # --- naive reference evaluator (lib/constraint.ml:166-251 semantics) --------
 
@@ -43,6 +43,10 @@ _CMP = {
 }
 
 
+# Prelude comparison relations the generated bodies use (lib/prelude).
+_INTENSIONAL = {"less_than": "lt", "greater_than_or_equal": "gte"}
+
+
 def _eval(body, env, rels):
     if isinstance(body, ast.Cmp):
         left, right = _binding_value(body.left, env), _binding_value(body.right, env)
@@ -50,6 +54,9 @@ def _eval(body, env, rels):
     if isinstance(body, ast.Between):
         v, lo, hi = (_binding_value(b, env) for b in (body.value, body.low, body.high))
         return _known(v, lo, hi) and lo <= v <= hi
+    if isinstance(body, ast.MemberOf) and body.target in _INTENSIONAL:
+        b = dict(body.bindings)
+        return _eval(ast.Cmp(_INTENSIONAL[body.target], b["left"], b["right"]), env, rels)
     if isinstance(body, ast.MemberOf):
         target = rels[body.target]
         return any(
@@ -285,3 +292,72 @@ def test_pinned_chains_on_bags_with_nulls(spark, kinds):
     qa = [(1,), (2,), (2,), (None,)]
     _check_multisets(spark, _lte_chain(kinds), xy, qa)
     _check_multisets(spark, _lte_chain(kinds), xy, [(q,) for (q,) in qa if q is not None])
+
+
+# --- direct violation plans against "rows minus satisfied rows" ------------
+#
+# ``violations`` pushes the negation into the body (a filter for predicate
+# trees, an anti-join for MemberOf, ...). Its row multiset must equal the
+# old definition, the value-based anti-join of the frame against its
+# satisfied rows, and the naive evaluator's, on bags with NULLs, for
+# bodies mixing every node kind: comparison and Between predicates,
+# intensional and extensional MemberOf, Not/And/Or and quantifiers
+# (degenerate ones included, whenever the inner body skips q.qa).
+
+
+def _mixed_body(var_names, depth):
+    var = st.sampled_from([ast.Var(v) for v in var_names])
+    operand = st.one_of(st.builds(ast.ConstVal, _VALS), var)
+    leaf = st.one_of(
+        st.builds(lambda bs: ast.MemberOf("R", bs), _bindings_for(("a", "b"), var_names)),
+        st.builds(ast.Cmp, st.sampled_from(list(_CMP)), var, operand),
+        st.builds(ast.Between, var, operand, operand),
+        st.builds(
+            lambda t, l, r: ast.MemberOf(t, (("left", l), ("right", r))),
+            st.sampled_from(sorted(_INTENSIONAL)), var, operand,
+        ),
+    )
+    if depth == 0:
+        return leaf
+    sub = _mixed_body(var_names, depth - 1)
+    quantified = st.builds(
+        lambda kind, inner: kind("q", "Q", inner),
+        st.sampled_from([ast.Exists, ast.Forall]),
+        _mixed_body(list(var_names) + ["q.qa"], depth - 1),
+    )
+    return st.one_of(
+        leaf,
+        st.builds(ast.Not, sub),
+        st.builds(ast.And, sub, sub),
+        st.builds(ast.Or, sub, sub),
+        quantified,
+    )
+
+
+@given(
+    body=_mixed_body(["x", "y"], depth=2),
+    xy=st.lists(st.tuples(_NVALS, _NVALS), min_size=0, max_size=6),
+    ab=st.lists(st.tuples(_NVALS, _NVALS), min_size=0, max_size=4),
+    qa=st.lists(st.tuples(_NVALS), min_size=0, max_size=3),
+)
+@settings(
+    max_examples=diff_examples(20, 5),
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+def test_direct_violations_match_rows_minus_satisfied(spark, body, xy, ab, qa):
+    df = spark.createDataFrame(xy, "x long, y long")
+    rels = {
+        "R": spark.createDataFrame(ab, "a long, b long"),
+        "Q": spark.createDataFrame(qa, "qa long"),
+    }
+    py_rels = {
+        "R": [{"a": a, "b": b} for a, b in ab],
+        "Q": [{"qa": q} for (q,) in qa],
+    }
+    key = lambda r: tuple((v is None, v or 0) for v in r)  # noqa: E731
+    got = sorted((tuple(r) for r in violations(df, body, rels).collect()), key=key)
+    old = _value_match(df, satisfied_rows(df, body, rels), "left_anti")
+    assert got == sorted((tuple(r) for r in old.collect()), key=key)
+    naive = [r for r in xy if not _eval(body, {"x": r[0], "y": r[1]}, py_rels)]
+    assert got == sorted(naive, key=key)

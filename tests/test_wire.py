@@ -54,6 +54,20 @@ def test_dml_delete_and_assign(server):
     assert out["rows"] == [[2]]  # set semantics collapse the bag union
 
 
+def test_dml_binds_attributes_by_name(server):
+    """A tuple's attributes bind by name, not by the order the statement
+    lists them in: with two string attributes a positional bind would
+    silently swap the values."""
+    server.execute('(ddl (CreateRelation (name "people") (schema (("first" "string") ("last" "string")))))')
+    server.execute('(dml (InsertTuple (relation "people") (attributes (("last" (Str "Lovelace")) ("first" (Str "Ada"))))))')
+    server.execute('(dml (InsertTuple (relation "people") (attributes (("first" (Str "Alan")) ("last" (Str "Turing"))))))')
+    out = server.execute('(drl (Base "people"))')
+    assert out["schema"] == ["first", "last"]
+    assert sorted(out["rows"]) == [["Ada", "Lovelace"], ["Alan", "Turing"]]
+    server.execute('(dml (DeleteTuple (relation "people") (attributes (("last" (Str "Lovelace")) ("first" (Str "Ada"))))))')
+    assert server.execute('(drl (Base "people"))')["rows"] == [["Alan", "Turing"]]
+
+
 def test_icl_fk_through_wire(server):
     server.execute('(ddl (CreateRelation (name "Department") (schema (("dept_id" "integer")))))')
     server.execute('(ddl (CreateRelation (name "Employee") (schema (("emp_id" "integer") ("dept_id" "integer")))))')
