@@ -50,6 +50,7 @@ from sakura_spark.hashing import (
     digest_word_sums,
     relation_hash,
     schema_signature,
+    tuple_hash_expr,
     with_tuple_hash,
 )
 from sakura_spark.icl import ast as icl_ast
@@ -76,6 +77,26 @@ CATALOG_SCHEMAS = {
 
 # One constraint check: (constraint name, relation, message, violations df).
 Check = tuple[str, str, str, DataFrame]
+
+
+def _at_union_types(df: DataFrame, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """df and batch, each cast to the column types of
+    ``df.unionByName(batch)`` — the types the stored union takes — and
+    returned as the same object when it already has them. A tuple hash is
+    over each value cast to string, which depends on its type (3 is "3" as
+    a bigint, "3.0" as a double), so duplicates and digests are only
+    comparable at the stored types. A driver-side schema compare; no job."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    if all(types[f.name] == f.dataType for f in batch.schema.fields):
+        return df, batch
+    types = {f.name: f.dataType for f in df.unionByName(batch).schema.fields}
+
+    def cast(frame: DataFrame) -> DataFrame:
+        if all(types[f.name] == f.dataType for f in frame.schema.fields):
+            return frame
+        return frame.select(*[F.col(c).cast(types[c]).alias(c) for c in frame.columns])
+
+    return cast(df), cast(batch)
 
 
 @dataclass
@@ -215,10 +236,10 @@ class Database:
         from sakura_spark.domains import domain_violation_cond
 
         rel = self._rel(relation)
-        batch = self._as_batch(rel, rows)
+        base, batch = _at_union_types(rel.df, self._as_batch(rel, rows))
         hashed_batch = with_tuple_hash(batch, relation)
         existing_hashes = (
-            with_tuple_hash(rel.df, relation)
+            with_tuple_hash(base, relation)
             .select(TUPLE_HASH_COL)
             .withColumn("__exists", F.lit(1))
         )
@@ -251,7 +272,7 @@ class Database:
                 f"{stats['domain_bad']} rows violate domain checks on {relation}"
             )
 
-        new_df = rel.df.unionByName(batch)
+        new_df = base.unionByName(batch)
         resolver = self._resolver_with(relation, new_df)
         # Immediate constraints on the new rows, then the cascade:
         # constraints referencing this relation with insert-triggered
@@ -260,9 +281,12 @@ class Database:
             self._immediate_checks(relation, batch, resolver, "inserted rows violate")
             + self._cascade(relation, batch, event="insert", resolver=resolver)
         )
+        # Widening the extension's own types re-spells its stored values,
+        # so its digest no longer sums them: the snapshot rescans once.
+        widened = base is not rel.df
         rel.df = new_df
         if rel.digest is not None:
-            rel.digest += Digest.of_row(stats)
+            rel.digest = None if widened else rel.digest + Digest.of_row(stats)
         self._mutated(relation)
         return n
 
@@ -273,11 +297,16 @@ class Database:
         batch = self._as_batch(rel, rows).dropDuplicates()
         # One job for batch count + presence check + the Digest of the
         # matched extension rows (a relation with a known digest is a set,
-        # so the left join cannot fan out). The digest sums the EXTENSION's
-        # tuple hashes, so it is exactly what the anti-join removes.
-        extension = with_tuple_hash(rel.df.select(*rel.attrs), relation)
+        # so the left join cannot fan out). The join keeps the EXTENSION's
+        # values and the tuple hashes are taken after it, so the digest
+        # sums exactly what the anti-join removes, and only the matched
+        # rows are hashed, not the whole extension.
+        keys = batch.select(*[F.col(a).alias(f"__k{i}") for i, a in enumerate(rel.attrs)])
+        extension = rel.df.select(*rel.attrs).withColumn("__present", F.lit(1))
+        on = [F.col(f"__k{i}") == F.col(a) for i, a in enumerate(rel.attrs)]
         stats = (
-            batch.join(extension.withColumn("__present", F.lit(1)), on=rel.attrs, how="left")
+            keys.join(extension, on=on, how="left")
+            .withColumn(TUPLE_HASH_COL, tuple_hash_expr(rel.attrs, relation))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count("__present").alias("present"),

@@ -21,7 +21,10 @@ not as "rows minus satisfied rows" (Catalyst cannot see that
     MemberOf       -> left-anti join on the bindings
     Not(x)         -> satisfied(x)
     Or(a, b)       -> violating(violating(a), b)
-    And(a, b)      -> violating(a) UNION violating(satisfied(a), b), disjoint
+    And(a, b)      -> violating(a) UNION violating(satisfied(a), b), disjoint,
+                      with the cheaper conjunct as a; when neither is a
+                      predicate tree or a MemberOf, an anti join on
+                      satisfied(And(a, b))
     Exists/Forall  -> anti/semi join on witness/counterexample hits
 
 The reference evaluates these per-tuple with nested scans
@@ -345,11 +348,14 @@ def _violating(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
         return _violating(_violating(df, body.left, resolver), body.right, resolver)
 
     if isinstance(body, ast.And):
-        # Violates a, or satisfies a and violates b. A predicate side goes
-        # first: its satisfied rows are one filter.
-        first, second = body.left, body.right
-        if _sat(first) is None and _sat(second) is not None:
-            first, second = second, first
+        # Violates a, or satisfies a and violates b. That plans the first
+        # conjunct twice, so the cheaper side goes first. When neither side
+        # is a predicate tree or a MemberOf (two quantifiers, each a witness
+        # crossJoin), one anti-join against the satisfied rows plans each
+        # conjunct once instead.
+        first, second = sorted((body.left, body.right), key=_rebuild_cost)
+        if _rebuild_cost(first) == 2:
+            return _value_match(df, _satisfied_values(df, body, resolver), "left_anti")
         passed = satisfied_rows(df, first, resolver)
         return _violating(df, first, resolver).union(_violating(passed, second, resolver))
 
@@ -367,6 +373,15 @@ def _violating(df: DataFrame, body: ast.Body, resolver: Resolver) -> DataFrame:
         return _value_match(df, hits, "left_anti" if isinstance(body, ast.Exists) else "left_semi")
 
     raise ValueError(f"unknown constraint body: {body!r}")
+
+
+def _rebuild_cost(body: ast.Body) -> int:
+    """How dear a second plan of body is: 0 for a predicate tree (one
+    filter), 1 for an extensional MemberOf (one broadcast join), 2 for
+    anything else."""
+    if _sat(body) is not None:
+        return 0
+    return 1 if isinstance(body, ast.MemberOf) else 2
 
 
 def referenced_vars(body: ast.Body) -> set[str]:

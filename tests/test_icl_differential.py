@@ -10,7 +10,7 @@ issues fixed in round 2).
 """
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 
 from conftest import diff_examples
 from hypothesis import strategies as st
@@ -334,6 +334,22 @@ def _mixed_body(var_names, depth):
     )
 
 
+_X, _Y, _QA = ast.Var("x"), ast.Var("y"), ast.Var("q.qa")
+_XY = [(1, 2), (1, 2), (2, None), (None, 3), (3, 0), (0, 3), (0, 3)]
+_AB = [(1, 0), (2, 3), (3, 2), (None, 0)]
+_QAS = [(0,), (2,), (None,)]
+
+
+# Every And plan: the union rule with the cheaper conjunct first, and the
+# anti-join against satisfied rows for an And of two quantifiers.
+@example(body=ast.And(ast.Exists("q", "Q", ast.Cmp("lt", _QA, _Y)),
+                      ast.Forall("q", "Q", ast.Cmp("neq", _QA, _X))), xy=_XY, ab=_AB, qa=_QAS)
+@example(body=ast.And(ast.Exists("q", "Q", ast.Cmp("lt", _QA, _Y)),
+                      ast.MemberOf("R", (("a", _X),))), xy=_XY, ab=_AB, qa=_QAS)
+@example(body=ast.And(ast.MemberOf("R", (("a", _X),)),
+                      ast.MemberOf("R", (("b", _Y),))), xy=_XY, ab=_AB, qa=_QAS)
+@example(body=ast.And(ast.Forall("q", "Q", ast.Cmp("gte", _QA, _X)),
+                      ast.Cmp("gt", _Y, _X)), xy=_XY, ab=_AB, qa=_QAS)
 @given(
     body=_mixed_body(["x", "y"], depth=2),
     xy=st.lists(st.tuples(_NVALS, _NVALS), min_size=0, max_size=6),

@@ -153,3 +153,49 @@ def test_failed_write_leaves_no_staging_and_no_relation(spark, store):
     leftover = [d for d in os.listdir(os.path.join(store.root, "relations"))
                 if d.startswith("__staging_")]
     assert leftover == []
+
+
+def _assert_matches_stored(db, name):
+    """The relation's hash and digest equal a rescan of its stored parquet:
+    what a load through a store that knows no digests computes."""
+    rel = db.state.relations[name]
+    stored = db.spark.read.parquet(db.store.relation_path(rel.hash))
+    want = relation_hash(stored, name, schema_signature(rel.schema_pairs))
+    assert rel.hash == want
+    assert rel.digest == want.digest
+    assert not want.had_duplicates
+
+
+def test_insert_widening_a_mounted_frame_keeps_hash_of_stored_rows(spark, store):
+    """A float and a decimal(10,2) column widen to the statement's double
+    and decimal(38,18): every stored value is re-spelled ("1.25" becomes
+    "1.250000000000000000"), so the hash follows the stored rows."""
+    from decimal import Decimal
+
+    mounted = spark.createDataFrame([(0.3, Decimal("1.25"))], "v float, d decimal(10,2)")
+    db = Database(spark, "widen", store=store)
+    db.register_external("m", mounted)
+    db.create_relation("t", _SCHEMA)  # snapshots m: its digest is known
+    assert db.state.relations["m"].digest is not None
+    db.insert_tuples("m", [{"v": 0.1, "d": Decimal("2.50")}])
+    _assert_matches_stored(db, "m")
+    db.insert_tuples("m", [{"v": 0.2, "d": Decimal("3.50")}])
+    _assert_matches_stored(db, "m")
+    db.delete_tuples("m", [{"v": 0.1, "d": Decimal("2.50")}])
+    _assert_matches_stored(db, "m")
+
+
+def test_narrower_statement_rows_hash_as_stored(spark, store):
+    """bigint rows into a float relation are stored as doubles (3 as
+    "3.0"): the digest sums them as stored, and a bigint 3 duplicates a
+    stored 3.0."""
+    db = Database(spark, "narrow", store=store)
+    db.create_relation("f", [("x", "float")])
+    db.insert_tuples("f", [{"x": 3.0}])
+    db.insert_from("f", spark.createDataFrame([(4,)], "x bigint"))
+    _assert_matches_stored(db, "f")
+    with pytest.raises(errors.DuplicateTuple):
+        db.insert_from("f", spark.createDataFrame([(3,)], "x bigint"))
+    db.delete_tuples("f", spark.createDataFrame([(4,)], "x bigint"))
+    _assert_matches_stored(db, "f")
+    assert [tuple(r) for r in db.relation("f").collect()] == [(3.0,)]
